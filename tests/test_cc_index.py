@@ -13,15 +13,19 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
 from pyspark.sql import functions as F
 
 from tijdloze_musicbrainz_spark.plans import REGISTRY
+from tijdloze_musicbrainz_spark.plans import cc_index as cc
 from tijdloze_musicbrainz_spark.plans.cc_index import (
     CC_DELTA_MOD,
-    _block_runs,
     _build_base,
-    _ingest_batch,
-    _probe_pairs,
+    _ingest_and_merge_generation,
+)
+from tijdloze_musicbrainz_spark.plans.lifecycle import (
+    current_snapshot,
+    probe_pairs,
 )
 
 
@@ -33,19 +37,15 @@ def _plan(df) -> str:
 
 
 def test_probe_reads_stored_blocks_bucketed(spark, sf_dir):
-    t_blocks, paths, docs_all, pay, _ = _build_base(
-        spark, sf_dir, "cc_plan_probe"
+    root, docs_all, pay, _ = _build_base(spark, sf_dir, "cc_plan_probe")
+    _ingest_and_merge_generation(
+        spark, root, docs_all, pay, F.col("doc_id") % CC_DELTA_MOD == 0, gen=1
     )
-    _ingest_batch(
-        spark,
-        t_blocks,
-        paths,
-        docs_all,
-        pay,
-        F.col("doc_id") % CC_DELTA_MOD == 0,
-        gen=1,
-    )
-    plan = _plan(_probe_pairs(spark, _block_runs(t_blocks, [1]), paths, gen=1))
+    # the generation's merge probed exactly this view: base run + the
+    # generation's run, staged delta blocks, every payload generation
+    snap = current_snapshot(root)
+    assert snap["runs"] == ["blocks_g0", "blocks_g1"]
+    plan = _plan(probe_pairs(spark, root, snap, cc._CC))
     assert "Bucketed: true" in plan
     assert "SortMergeJoin" in plan
     assert "CartesianProduct" not in plan
@@ -57,6 +57,44 @@ def test_probe_reads_stored_blocks_bucketed(spark, sf_dir):
     # test_small_delta_probe_skips_row_groups; here we pin the cc tier
     # wires the same sidecar through its probe)
     assert "In(blk" in plan, plan[:4000]
+
+
+def test_base_pairs_broadcast_when_block_bytes_unavailable(
+    spark, sf_dir, monkeypatch
+):
+    """The base-vs-base self-join's broadcast gate must still engage
+    when the checkpoint reports no block bytes (a RELIABLE checkpoint
+    dir — bytes=None): the exact base row count then sizes the build
+    side against CC_PAY_BCAST_ROW_BYTES. The pairs DataFrame handed to
+    connected_components is captured and its plan inspected, with the
+    planner's own size-based broadcast switched off so only the gate's
+    decision can produce the broadcast."""
+    real = cc.checkpointed_payload
+
+    def no_bytes(*a, **k):
+        df, metrics = real(*a, **k)
+        return df, {**metrics, "bytes": None}
+
+    class Captured(Exception):
+        pass
+
+    edges = {}
+
+    def capture(df):
+        edges["plan"] = _plan(df)
+        raise Captured
+
+    monkeypatch.setattr(cc, "checkpointed_payload", no_bytes)
+    monkeypatch.setattr(cc, "connected_components", capture)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        with pytest.raises(Captured):
+            _build_base(spark, sf_dir, "cc_bcast_gate")
+    finally:
+        spark.conf.set(key, prev)
+    assert "BroadcastHashJoin" in edges["plan"], edges["plan"][:4000]
 
 
 def test_incremental_labels_equal_batch_clustering(spark, sf_dir):

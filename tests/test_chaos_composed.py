@@ -29,7 +29,9 @@ from tijdloze_musicbrainz_spark.plans.lifecycle import (
     current_snapshot,
     current_snapshot_version,
     index_root,
-    sf_tag,
+    manifest,
+    role_dirs,
+    run_table,
 )
 from tijdloze_musicbrainz_spark.plans.util import t
 from tijdloze_musicbrainz_spark.sources.bucketing import (
@@ -42,7 +44,6 @@ def test_chaos_three_generations_reader_loser_kill(
     spark, sf_dir, monkeypatch
 ):
     name = "mh_chaos"
-    tag = sf_tag(sf_dir)
     root = index_root(sf_dir, name)
 
     docs = (
@@ -56,19 +57,15 @@ def test_chaos_three_generations_reader_loser_kill(
         arrivals.filter(F.col("doc_id") % 30 == rem) for rem in (0, 10, 20)
     ]
 
-    # -- base build, snapshot v0 (same shape as _build_and_ingest) -----
-    t_bands = f"{name}_bands_{tag}"
-    di._write_gen_bands(di._bands_of(base), t_bands, f"{root}/bands_g0")
-    di._write_gen_shingles(di._shingle_sets(base), f"{root}/shingles/gen=0")
+    # -- base build, snapshot v0 (same shape as _build_base_index) -----
+    di.write_run(di._bands_of(base), f"{root}/bands_g0", di._MH)
+    di.write_payload(di._shingle_sets(base), f"{root}/shingles/gen=0")
     n_base = base.count()
     commit_snapshot(
         root,
-        {
-            "bands": [t_bands],
-            "shingle_dirs": [f"{root}/shingles/gen=0"],
-            "n_indexed": n_base,
-            "key_stats": None,
-        },
+        manifest(
+            runs=["bands_g0"], payload=["shingles/gen=0"], n_indexed=n_base
+        ),
     )
 
     def check_invariant() -> int:
@@ -77,15 +74,15 @@ def test_chaos_three_generations_reader_loser_kill(
         snap = current_snapshot(root)
         n_payload = (
             spark.read.schema("doc_id bigint, sgs array<string>")
-            .parquet(*snap["shingle_dirs"])
+            .parquet(*role_dirs(root, snap, "payload"))
             .count()
         )
         assert n_payload == snap["n_indexed"], (
             f"torn snapshot: payload {n_payload} != "
             f"accounting {snap['n_indexed']}"
         )
-        for run in snap["bands"]:
-            spark.table(run).count()  # readable, complete footers
+        for run in role_dirs(root, snap, "runs"):
+            spark.table(run_table(run)).count()  # readable, complete footers
         return current_snapshot_version(root)
 
     # -- gen 1: a reader races the whole ingest transaction ------------
@@ -106,7 +103,7 @@ def test_chaos_three_generations_reader_loser_kill(
     th = threading.Thread(target=reader)
     th.start()
     try:
-        di._ingest_generation(spark, root, name, tag, batches[0], gen=1)
+        di._ingest_generation(spark, root, batches[0], gen=1)
     finally:
         writer_done.set()
         th.join(timeout=300)
@@ -117,22 +114,22 @@ def test_chaos_three_generations_reader_loser_kill(
     # generation lands cleanly once the holder releases ---------------
     with exclusive_append(root, owner="other_live_writer"):
         with pytest.raises(ConcurrentAppendError):
-            di._ingest_generation(spark, root, name, tag, batches[1], gen=2)
+            di._ingest_generation(spark, root, batches[1], gen=2)
     assert current_snapshot_version(root) == 1  # reject left no trace
     check_invariant()
-    di._ingest_generation(spark, root, name, tag, batches[1], gen=2)
+    di._ingest_generation(spark, root, batches[1], gen=2)
     assert current_snapshot_version(root) == 2
 
     # -- gen 3: kill mid-transaction, verify old snapshot, recover -----
-    real = di._write_gen_shingles
+    real = di.write_payload
 
     def crash_once(sh, path):
-        monkeypatch.setattr(di, "_write_gen_shingles", real)
+        monkeypatch.setattr(di, "write_payload", real)
         raise RuntimeError("injected gen-3 crash")
 
-    monkeypatch.setattr(di, "_write_gen_shingles", crash_once)
+    monkeypatch.setattr(di, "write_payload", crash_once)
     with pytest.raises(RuntimeError, match="injected gen-3 crash"):
-        di._ingest_generation(spark, root, name, tag, batches[2], gen=3)
+        di._ingest_generation(spark, root, batches[2], gen=3)
     assert check_invariant() == 2  # readers still on the gen-2 snapshot
 
     # hard-kill debris: the dead writer's lock
@@ -141,26 +138,16 @@ def test_chaos_three_generations_reader_loser_kill(
     lock = os.path.join(root, "_APPEND_LOCK")
     with open(lock, "w") as f:
         f.write(f"pid={proc.pid} owner={name}\n")
-    di._ingest_generation(spark, root, name, tag, batches[2], gen=3)
+    di._ingest_generation(spark, root, batches[2], gen=3)
     assert not os.path.exists(lock)
 
     # -- end state: every batch landed exactly once --------------------
     final = current_snapshot(root)
     assert check_invariant() == 3
     assert final["n_indexed"] == n_base + arrivals.count()
-    assert final["bands"] == [
-        t_bands,
-        f"{t_bands}_g1",
-        f"{t_bands}_g2",
-        f"{t_bands}_g3",
-    ]
+    assert final["runs"] == ["bands_g0", "bands_g1", "bands_g2", "bands_g3"]
+    assert final["staging"] == ["stage/delta_3"]
     # the survived index answers probes: batch-3 arrivals find their
     # planted near-dup partners across ALL generations
-    pairs = di._probe_index(
-        spark,
-        final["bands"],
-        final["shingle_dirs"],
-        f"{root}/stage/delta_bands_g3",
-        final["n_indexed"],
-    ).collect()
+    pairs = di._probe_index(spark, root, final).collect()
     assert pairs, "post-chaos probe found nothing — index unusable"

@@ -38,7 +38,9 @@ from tijdloze_musicbrainz_spark.plans.lifecycle import (
     current_snapshot,
     current_snapshot_version,
     index_root,
-    sf_tag,
+    manifest,
+    role_dirs,
+    run_table,
 )
 from tijdloze_musicbrainz_spark.plans.similarity import pq_lifecycle as pq
 from tijdloze_musicbrainz_spark.plans.util import t
@@ -98,28 +100,25 @@ def test_chaos_cc_three_generations_reader_loser_kill(
     generations) covers exactly n_indexed documents and every block
     run is readable — a torn view breaks the count or errors."""
     name = "cc_chaos"
-    t_blocks, paths, docs_all, pay, n_base = cc._build_base(
-        spark, sf_dir, name
-    )
-    root = paths["root"]
+    root, docs_all, pay, n_base = cc._build_base(spark, sf_dir, name)
     preds = [F.col("doc_id") % 30 == rem for rem in (0, 10, 20)]
 
     def check_invariant() -> int:
         snap = current_snapshot(root)
-        n_labels = cc._resolve_labels(spark, paths, snap["gens"]).count()
+        n_labels = cc._snapshot_labels(spark, root, snap).count()
         assert n_labels == snap["n_indexed"], (
             f"torn snapshot: labels {n_labels} != "
             f"accounting {snap['n_indexed']}"
         )
-        for run in snap["blocks"]:
-            spark.table(run).count()
+        for run in role_dirs(root, snap, "runs"):
+            spark.table(run_table(run)).count()
         return current_snapshot_version(root)
 
     # gen 1: reader races the whole merge transaction
     seen = _race_reader(
         check_invariant,
         lambda: cc._ingest_and_merge_generation(
-            spark, t_blocks, paths, docs_all, pay, preds[0], gen=1
+            spark, root, docs_all, pay, preds[0], gen=1
         ),
     )
     assert 1 in seen, "reader never observed the post-commit view"
@@ -128,11 +127,11 @@ def test_chaos_cc_three_generations_reader_loser_kill(
     with exclusive_append(root, owner="other_live_writer"):
         with pytest.raises(ConcurrentAppendError):
             cc._ingest_and_merge_generation(
-                spark, t_blocks, paths, docs_all, pay, preds[1], gen=2
+                spark, root, docs_all, pay, preds[1], gen=2
             )
     assert check_invariant() == 1  # reject left no trace
     cc._ingest_and_merge_generation(
-        spark, t_blocks, paths, docs_all, pay, preds[1], gen=2
+        spark, root, docs_all, pay, preds[1], gen=2
     )
     assert check_invariant() == 2
 
@@ -147,12 +146,12 @@ def test_chaos_cc_three_generations_reader_loser_kill(
     monkeypatch.setattr(cc, "_journal_moves", crash_once)
     with pytest.raises(RuntimeError, match="injected cc gen-3 crash"):
         cc._ingest_and_merge_generation(
-            spark, t_blocks, paths, docs_all, pay, preds[2], gen=3
+            spark, root, docs_all, pay, preds[2], gen=3
         )
     assert check_invariant() == 2
     lock = _dead_writer_lock(root, f"{name}_crashed")
     cc._ingest_and_merge_generation(
-        spark, t_blocks, paths, docs_all, pay, preds[2], gen=3
+        spark, root, docs_all, pay, preds[2], gen=3
     )
     assert not os.path.exists(lock)
     assert check_invariant() == 3
@@ -161,13 +160,13 @@ def test_chaos_cc_three_generations_reader_loser_kill(
     # resolve to EXACTLY the registered single-generation operator's
     # labels (the closure is batching-invariant)
     snap = current_snapshot(root)
-    assert snap["gens"] == [1, 2, 3]
+    assert snap["remaps"] == [f"remaps/gen={g}" for g in (1, 2, 3)]
     assert snap["n_indexed"] == n_base + docs_all.filter(
         F.col("doc_id") % cc.CC_DELTA_MOD == 0
     ).count()
     got = {
         (r["doc_id"], r["cluster_id"])
-        for r in cc._resolve_labels(spark, paths, snap["gens"]).collect()
+        for r in cc._snapshot_labels(spark, root, snap).collect()
     }
     want = {
         (r["doc_id"], r["cluster_id"])
@@ -187,20 +186,19 @@ def test_chaos_ann_three_generations_reader_loser_kill(
     append operator's — index content is ingest-batching-invariant."""
     base = pq._pq_vecs(spark, sf_dir)
     subs = pq._pq_subs(base)
-    root = pq._pq_index_root(sf_dir, "ivfpq_chaos")
+    root = index_root(sf_dir, "ivfpq_chaos")
     pq._pq_write_index(
         base, subs, pq._pq_seed_codebook(base, subs), pq._ivf_cents(base),
         root,
     )
     delta = pq._pq_delta(base)
-    cb = spark.read.parquet(f"{root}/codebook")
-    cents = spark.read.parquet(f"{root}/cents")
+    cb, cents = pq._pq_model(spark, root)
     slices = [delta.filter(F.col("vec_id") % 3 == r) for r in (0, 1, 2)]
 
     def check_invariant() -> int:
         snap = current_snapshot(root)
-        for d in snap["list_dirs"]:
-            spark.read.parquet(f"{root}/{d}").count()
+        for d in role_dirs(root, snap, "runs"):
+            spark.read.parquet(d).count()
         return current_snapshot_version(root)
 
     # gen 1: reader races the ingest
@@ -233,7 +231,7 @@ def test_chaos_ann_three_generations_reader_loser_kill(
     pq._pq_ingest_batch(slices[2], cb, cents, root, gen="g3")
     assert not os.path.exists(lock)
     assert check_invariant() == 3
-    assert current_snapshot(root)["list_dirs"] == [
+    assert current_snapshot(root)["runs"] == [
         "lists", "lists_g1", "lists_g2", "lists_g3",
     ]
 
@@ -262,37 +260,28 @@ def test_concurrent_multi_tier_ingest_snapshot_isolation(spark, sf_dir):
     cross-tier lock interference: all three commits land, every lock
     is released, and each tier's post-ingest probe matches the
     registered operator that ingests the same delta sequentially."""
-    tag = sf_tag(sf_dir)
-
     # sequential base builds (the nightly pipeline builds once,
     # ingests nightly); distinct names keep roots/tables disjoint
     mh_name = "mh_conc"
-    mh_root, mh_tag, _mh_base, mh_delta = di._build_base_index(
-        spark, sf_dir, mh_name
-    )
+    mh_root, mh_delta = di._build_base_index(spark, sf_dir, mh_name)
 
     cc_name = "cc_conc"
-    t_blocks, paths, docs_all, pay, _nb = cc._build_base(
-        spark, sf_dir, cc_name
-    )
+    cc_root, docs_all, pay, _nb = cc._build_base(spark, sf_dir, cc_name)
 
     base = pq._pq_vecs(spark, sf_dir)
     subs = pq._pq_subs(base)
-    pq_root = pq._pq_index_root(sf_dir, "ivfpq_conc")
+    pq_root = index_root(sf_dir, "ivfpq_conc")
     pq._pq_write_index(
         base, subs, pq._pq_seed_codebook(base, subs), pq._ivf_cents(base),
         pq_root,
     )
     pq_delta = pq._pq_delta(base)
-    cb = spark.read.parquet(f"{pq_root}/codebook")
-    cents = spark.read.parquet(f"{pq_root}/cents")
+    cb, cents = pq._pq_model(spark, pq_root)
 
     jobs = {
-        "minhash": lambda: di._ingest_generation(
-            spark, mh_root, mh_name, mh_tag, mh_delta
-        ),
+        "minhash": lambda: di._ingest_generation(spark, mh_root, mh_delta),
         "cluster": lambda: cc._ingest_and_merge_generation(
-            spark, t_blocks, paths, docs_all, pay,
+            spark, cc_root, docs_all, pay,
             F.col("doc_id") % cc.CC_DELTA_MOD == 0, gen=1,
         ),
         "ann": lambda: pq._pq_ingest_batch(pq_delta, cb, cents, pq_root),
@@ -313,20 +302,17 @@ def test_concurrent_multi_tier_ingest_snapshot_isolation(spark, sf_dir):
     assert not errors, errors
 
     # all three commits landed; all three locks released
-    for root in (mh_root, paths["root"], pq_root):
+    for root in (mh_root, cc_root, pq_root):
         assert current_snapshot_version(root) >= 1, root
         assert not os.path.exists(os.path.join(root, "_APPEND_LOCK")), root
+        # one manifest schema: every tier commits the same top-level keys
+        assert set(current_snapshot(root)) == set(manifest()), root
 
     # each tier's probe equals its sequential registered twin
-    mh_snap = current_snapshot(mh_root)
     got_mh = {
         tuple(r)
         for r in di._probe_index(
-            spark,
-            mh_snap["bands"],
-            mh_snap["shingle_dirs"],
-            f"{mh_root}/stage/delta_bands",
-            mh_snap["n_indexed"],
+            spark, mh_root, current_snapshot(mh_root)
         ).collect()
     }
     want_mh = {
@@ -337,10 +323,11 @@ def test_concurrent_multi_tier_ingest_snapshot_isolation(spark, sf_dir):
     }
     assert got_mh == want_mh and got_mh
 
-    cc_snap = current_snapshot(paths["root"])
     got_cc = {
         (r["doc_id"], r["cluster_id"])
-        for r in cc._resolve_labels(spark, paths, cc_snap["gens"]).collect()
+        for r in cc._snapshot_labels(
+            spark, cc_root, current_snapshot(cc_root)
+        ).collect()
     }
     want_cc = {
         (r["doc_id"], r["cluster_id"])

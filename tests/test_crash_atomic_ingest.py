@@ -24,7 +24,7 @@ from tijdloze_musicbrainz_spark.plans.lifecycle import (
     current_snapshot,
     current_snapshot_version,
     index_root,
-    sf_tag,
+    run_table,
 )
 from tijdloze_musicbrainz_spark.sources.bucketing import (
     ConcurrentAppendError,
@@ -106,7 +106,7 @@ def test_mh_kill_mid_ingest_leaves_old_snapshot_then_recovery_converges(
     from tijdloze_musicbrainz_spark.plans import dedup_index as di
 
     name = "mh_crash"
-    real = di._write_gen_shingles
+    real = di.write_payload
     calls = {"n": 0}
 
     def flaky(sh, path):
@@ -115,7 +115,7 @@ def test_mh_kill_mid_ingest_leaves_old_snapshot_then_recovery_converges(
             raise RuntimeError("injected crash between store writes")
         real(sh, path)
 
-    monkeypatch.setattr(di, "_write_gen_shingles", flaky)
+    monkeypatch.setattr(di, "write_payload", flaky)
     with pytest.raises(RuntimeError, match="injected crash"):
         di._build_and_ingest(spark, sf_dir, name)
     monkeypatch.undo()
@@ -123,7 +123,6 @@ def test_mh_kill_mid_ingest_leaves_old_snapshot_then_recovery_converges(
     from tijdloze_musicbrainz_spark.plans.util import t
 
     root = index_root(sf_dir, name, fresh=False)
-    tag = sf_tag(sf_dir)
     docs = (
         t(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
@@ -135,13 +134,13 @@ def test_mh_kill_mid_ingest_leaves_old_snapshot_then_recovery_converges(
     # one band run, one payload dir, base-only accounting — even
     # though the dead writer's partial band run exists on disk
     snap = current_snapshot(root)
-    assert snap["bands"] == [f"{name}_bands_{tag}"]
-    assert snap["shingle_dirs"] == [f"{root}/shingles/gen=0"]
+    assert snap["runs"] == ["bands_g0"]
+    assert snap["payload"] == ["shingles/gen=0"]
     assert snap["n_indexed"] == n_base
     assert os.path.exists(f"{root}/bands_g1"), "crash fired too early"
     # every store the snapshot names is complete and readable
-    assert spark.table(snap["bands"][0]).count() > 0
-    assert spark.read.parquet(*snap["shingle_dirs"]).count() == n_base
+    assert spark.table(run_table(f"{root}/bands_g0")).count() > 0
+    assert spark.read.parquet(f"{root}/shingles/gen=0").count() == n_base
 
     # hard-kill simulation: the dead writer's lock is still in place
     lock = os.path.join(root, "_APPEND_LOCK")
@@ -151,21 +150,14 @@ def test_mh_kill_mid_ingest_leaves_old_snapshot_then_recovery_converges(
     # recovery: replay the generation — stale lock taken over, every
     # write overwrites its deterministic path, one commit publishes
     delta = docs.filter(F.col("doc_id") % di.DEDUP_DELTA_MOD == 0)
-    di._ingest_generation(spark, root, name, tag, delta)
+    di._ingest_generation(spark, root, delta)
     assert not os.path.exists(lock)
 
     snap2 = current_snapshot(root)
-    assert snap2["bands"] == [f"{name}_bands_{tag}", f"{name}_bands_{tag}_g1"]
-    assert len(snap2["shingle_dirs"]) == 2
+    assert snap2["runs"] == ["bands_g0", "bands_g1"]
+    assert len(snap2["payload"]) == 2
     recovered = {
-        tuple(r)
-        for r in di._probe_index(
-            spark,
-            snap2["bands"],
-            snap2["shingle_dirs"],
-            f"{root}/stage/delta_bands",
-            snap2["n_indexed"],
-        ).collect()
+        tuple(r) for r in di._probe_index(spark, root, snap2).collect()
     }
     expected = {
         tuple(r)
@@ -188,9 +180,7 @@ def test_cc_kill_mid_merge_leaves_old_snapshot_then_recovery_converges(
     from tijdloze_musicbrainz_spark.plans import cc_index as cc
 
     name = "cc_crash"
-    t_blocks, paths, docs_all, pay, n_base = cc._build_base(
-        spark, sf_dir, name
-    )
+    root, docs_all, pay, n_base = cc._build_base(spark, sf_dir, name)
 
     def boom(merged, batch_ids):
         raise RuntimeError("injected crash before remap journal")
@@ -199,19 +189,18 @@ def test_cc_kill_mid_merge_leaves_old_snapshot_then_recovery_converges(
     pred = F.col("doc_id") % cc.CC_DELTA_MOD == 0
     with pytest.raises(RuntimeError, match="injected crash"):
         cc._ingest_and_merge_generation(
-            spark, t_blocks, paths, docs_all, pay, pred, gen=1
+            spark, root, docs_all, pay, pred, gen=1
         )
     monkeypatch.undo()
 
-    root = paths["root"]
     snap = current_snapshot(root)
-    assert snap["gens"] == [] and snap["n_indexed"] == n_base
+    assert snap["remaps"] == [] and snap["n_indexed"] == n_base
     # the committed view resolves cleanly to base-only labels even
     # though the dead writer's labels/gen=1 exists on disk
-    assert os.path.exists(f"{paths['labels']}/gen=1"), "crash fired too early"
+    assert os.path.exists(f"{root}/labels/gen=1"), "crash fired too early"
     base_view = {
         (r["doc_id"], r["cluster_id"])
-        for r in cc._resolve_labels(spark, paths, snap["gens"]).collect()
+        for r in cc._snapshot_labels(spark, root, snap).collect()
     }
     assert len(base_view) == n_base
 
@@ -219,15 +208,13 @@ def test_cc_kill_mid_merge_leaves_old_snapshot_then_recovery_converges(
     with open(lock, "w") as f:
         f.write(f"pid={_dead_pid()} owner={name}\n")
 
-    cc._ingest_and_merge_generation(
-        spark, t_blocks, paths, docs_all, pay, pred, gen=1
-    )
+    cc._ingest_and_merge_generation(spark, root, docs_all, pay, pred, gen=1)
     assert not os.path.exists(lock)
     snap2 = current_snapshot(root)
-    assert snap2["gens"] == [1]
+    assert snap2["remaps"] == ["remaps/gen=1"]
     recovered = {
         (r["doc_id"], r["cluster_id"])
-        for r in cc._resolve_labels(spark, paths, snap2["gens"]).collect()
+        for r in cc._snapshot_labels(spark, root, snap2).collect()
     }
     expected = {
         (r["doc_id"], r["cluster_id"])
@@ -255,13 +242,12 @@ def test_ann_kill_mid_ingest_leaves_old_snapshot_then_recovery_converges(
 
     base = pq._pq_vecs(spark, sf_dir)
     subs = pq._pq_subs(base)
-    root = pq._pq_index_root(sf_dir, "ivfpq_crash")
+    root = index_root(sf_dir, "ivfpq_crash")
     pq._pq_write_index(
         base, subs, pq._pq_seed_codebook(base, subs), pq._ivf_cents(base), root
     )
     delta = pq._pq_delta(base)
-    cb = spark.read.parquet(f"{root}/codebook")
-    cents = spark.read.parquet(f"{root}/cents")
+    cb, cents = pq._pq_model(spark, root)
 
     real_commit = pq.commit_snapshot
 
@@ -275,7 +261,7 @@ def test_ann_kill_mid_ingest_leaves_old_snapshot_then_recovery_converges(
 
     # reader view: base-only snapshot, the dead writer's run invisible
     snap = current_snapshot(root)
-    assert snap["list_dirs"] == ["lists"]
+    assert snap["runs"] == ["lists"]
     assert os.path.exists(f"{root}/lists_g1"), "crash fired too early"
 
     # hard-kill debris + recovery replay
@@ -284,7 +270,7 @@ def test_ann_kill_mid_ingest_leaves_old_snapshot_then_recovery_converges(
         f.write(f"pid={_dead_pid()} owner=pq_crashed\n")
     pq._pq_ingest_batch(delta, cb, cents, root)
     assert not os.path.exists(lock)
-    assert current_snapshot(root)["list_dirs"] == ["lists", "lists_g1"]
+    assert current_snapshot(root)["runs"] == ["lists", "lists_g1"]
 
     corpus = base.select("vec_id", "v").unionByName(delta.select("vec_id", "v"))
     topk, _, _, _ = pq._pq_query_stored(spark, base, subs, root, corpus)

@@ -112,6 +112,7 @@ def test_probe_is_lazy_and_scans_index_once(spark, sf_dir):
     once (probe side reads the staged delta-signature files, not the
     index)."""
     from tijdloze_musicbrainz_spark.plans import dedup_index as di
+    from tijdloze_musicbrainz_spark.plans.lifecycle import role_dirs, run_table
 
     args = di._build_and_ingest(spark, sf_dir, "mh_lazy")
     sc = spark.sparkContext
@@ -129,15 +130,15 @@ def test_probe_is_lazy_and_scans_index_once(spark, sf_dir):
     # exactly one scan NODE per stored band RUN (base + one ingested
     # generation): formatted explain prints each node once as a
     # numbered detail header "(n) Scan ..."
-    band_runs = args[0]
-    assert isinstance(band_runs, list) and len(band_runs) == 2, band_runs
+    band_runs = [run_table(d) for d in role_dirs(*args, "runs")]
+    assert len(band_runs) == 2, band_runs
     for run in band_runs:
         scan_nodes = re.findall(
             rf"\(\d+\) Scan parquet \S*\.{re.escape(run)}\b", plan
         )
         assert len(scan_nodes) == 1, (run, plan)
     # probe side reads the staged delta-signature files, not the index
-    assert "stage/delta_bands" in plan
+    assert "stage/delta_1" in plan
     # and no aggregate feeds the n_indexed column — it is a literal
     assert df.schema["n_indexed"].dataType.typeName() == "long"
 
@@ -272,6 +273,8 @@ def test_small_delta_probe_skips_row_groups(spark, tmp_path):
 
     from tijdloze_musicbrainz_spark.plans import dedup_index as di
     from tijdloze_musicbrainz_spark.plans.lifecycle import (
+        manifest,
+        run_table,
         write_delta_key_manifest,
     )
     from tijdloze_musicbrainz_spark.sources.bucketing import write_bucketed
@@ -281,7 +284,9 @@ def test_small_delta_probe_skips_row_groups(spark, tmp_path):
     store = spark.range(n_store).select(
         F.xxhash64("id").alias("band_key"), F.col("id").alias("doc_id")
     )
-    loc = str(tmp_path / "bands")
+    root = tmp_path / "probe_skip"
+    loc = str(root / "bands")
+    assert run_table(loc) == "probe_skip_bands"
     # a COMPACTED layout (one sorted file per bucket, several row
     # groups each — forced by a small parquet block size) so row-group
     # ranges are narrow; 512 single-row-group shard files would make
@@ -305,12 +310,12 @@ def test_small_delta_probe_skips_row_groups(spark, tmp_path):
             hconf.set("parquet.block.size", old_bs)
     rows5 = spark.table("probe_skip_bands").limit(5).collect()
     hit_keys = [r["band_key"] for r in rows5]
-    delta_dir = str(tmp_path / "delta")
+    delta_dir = str(root / "delta")
     spark.createDataFrame(
         [(10_000_000 + i, k) for i, k in enumerate(hit_keys)],
         "doc_id bigint, band_key bigint",
     ).coalesce(1).write.parquet(delta_dir)
-    sh_dir = str(tmp_path / "sh")
+    sh_dir = str(root / "sh")
     spark.createDataFrame(
         [
             (i, ["a b c"])
@@ -322,7 +327,10 @@ def test_small_delta_probe_skips_row_groups(spark, tmp_path):
 
     def probe_plan():
         df = di._probe_index(
-            spark, "probe_skip_bands", sh_dir, delta_dir, 1
+            spark,
+            str(root),
+            manifest(runs=["bands"], payload=["sh"], staging=["delta"],
+                     n_indexed=1),
         )
         df.collect()
         return df._jdf.queryExecution().executedPlan().toString()
@@ -356,7 +364,7 @@ def test_small_delta_probe_skips_row_groups(spark, tmp_path):
     # lets the parquet reader decode (the store is bucket-SORTED on
     # band_key, so row-group ranges are narrow)
     eligible = total = 0
-    for f in (tmp_path / "bands").glob("*.parquet"):
+    for f in (root / "bands").glob("*.parquet"):
         md = pq.ParquetFile(str(f)).metadata
         ci = {md.schema.column(i).name: i for i in range(md.num_columns)}
         for g in range(md.num_row_groups):

@@ -36,6 +36,7 @@ from tijdloze_musicbrainz_spark.plans.lifecycle import (
     commit_snapshot,
     current_snapshot,
     current_snapshot_version,
+    manifest,
     vacuum_unreferenced,
 )
 from tijdloze_musicbrainz_spark.sources import bucketing as bk
@@ -282,22 +283,29 @@ def _mini_tier(root: str) -> None:
         "shingles/gen=1/part-0.parquet",
         "shingles/gen=2/part-0.parquet",  # orphan generation payload
         "bands_g2/part-0.parquet",  # orphan generation run
-        "stage/delta/part-0.parquet",  # probe staging (protected)
+        "stage/delta_1/part-0.parquet",  # probe staging (named)
     ):
         io.put_atomic(os.path.join(root, child), "data")
+    payload = ["shingles/gen=0", "shingles/gen=1"]
     commit_snapshot(
         root,
-        {"dirs": ["bands_g0", "bands_g1", "shingles/gen=0",
-                  "shingles/gen=1"]},
+        manifest(runs=["bands_g0", "bands_g1"], payload=payload,
+                 staging=["stage/delta_1"]),
     )
     commit_snapshot(
         root,
-        {"dirs": ["bands_c", "shingles/gen=0", "shingles/gen=1"]},
+        manifest(runs=["bands_c"], payload=payload,
+                 staging=["stage/delta_1"]),
     )
     # abandoned writer: manifest one past the pointer, never flipped
     io.put_if_absent(
-        f"{root}/_snapshots/v2.json", json.dumps({"dirs": ["bands_g2"]})
+        f"{root}/_snapshots/v2.json",
+        json.dumps(manifest(runs=["bands_g2"])),
     )
+
+
+def _named(snap: dict) -> list[str]:
+    return [d for r in ("runs", "payload", "staging") for d in snap[r]]
 
 
 def test_vacuum_removes_only_unreferenced_and_keeps_reads_identical(
@@ -307,17 +315,15 @@ def test_vacuum_removes_only_unreferenced_and_keeps_reads_identical(
     _mini_tier(root)
     before = current_snapshot(root)
 
-    report = vacuum_unreferenced(
-        root, lambda snap: set(snap["dirs"]), keep_snapshots=2
-    )
+    report = vacuum_unreferenced(root, keep_snapshots=2)
     # orphan run + orphan payload generation are gone...
     assert report["deleted"] == ["bands_g2", "shingles/gen=2"]
     assert not os.path.exists(f"{root}/bands_g2")
     assert not os.path.exists(f"{root}/shingles/gen=2")
     # ...every store either retained manifest names survives (v0 keeps
-    # bands_g0/g1 alive inside the window), stage is protected...
+    # bands_g0/g1 alive inside the window), staging is named...
     for kept in ("bands_g0", "bands_g1", "bands_c", "shingles/gen=0",
-                 "shingles/gen=1", "stage/delta"):
+                 "shingles/gen=1", "stage/delta_1"):
         assert os.path.exists(os.path.join(root, kept)), kept
     # ...the above-pointer orphan manifest is trimmed, retained kept
     assert report["retained_versions"] == [0, 1]
@@ -327,9 +333,7 @@ def test_vacuum_removes_only_unreferenced_and_keeps_reads_identical(
     assert current_snapshot_version(root) == 1
 
     # retention window of 1: the superseded generation dirs now go
-    report = vacuum_unreferenced(
-        root, lambda snap: set(snap["dirs"]), keep_snapshots=1
-    )
+    report = vacuum_unreferenced(root, keep_snapshots=1)
     assert report["deleted"] == ["bands_g0", "bands_g1"]
     assert not os.path.exists(f"{root}/_snapshots/v0.json")
     assert current_snapshot(root) == before
@@ -348,7 +352,7 @@ def test_vacuum_concurrent_reader_never_errors(tmp_path):
         try:
             while not stop.is_set():
                 snap = current_snapshot(root)
-                for d in snap["dirs"]:
+                for d in _named(snap):
                     text = io.get_text(
                         os.path.join(root, d, "part-0.parquet")
                     )
@@ -360,9 +364,7 @@ def test_vacuum_concurrent_reader_never_errors(tmp_path):
     th.start()
     try:
         for keep in (2, 1, 1):
-            vacuum_unreferenced(
-                root, lambda snap: set(snap["dirs"]), keep_snapshots=keep
-            )
+            vacuum_unreferenced(root, keep_snapshots=keep)
     finally:
         stop.set()
         th.join(timeout=60)
@@ -376,7 +378,7 @@ def test_vacuum_requires_the_lease(tmp_path, fake_clock):
     _mini_tier(root)
     with exclusive_append(root, owner="live_ingest"):
         with pytest.raises(ConcurrentAppendError):
-            vacuum_unreferenced(root, lambda s: set(s["dirs"]))
+            vacuum_unreferenced(root)
 
 
 # ── 5. sweep threshold override is engine-symmetric ─────────────────
@@ -429,7 +431,7 @@ def test_mh_ingest_fenced_after_mid_transaction_takeover(
     from tijdloze_musicbrainz_spark.plans import REGISTRY, dedup_index as di
 
     name = "mh_fence"
-    root, tag, _base, delta = di._build_base_index(spark, sf_dir, name)
+    root, delta = di._build_base_index(spark, sf_dir, name)
     base_snap = current_snapshot(root)
 
     # shorten the tier's lease without touching the default
@@ -438,35 +440,28 @@ def test_mh_ingest_fenced_after_mid_transaction_takeover(
         "exclusive_append",
         lambda loc, owner="": exclusive_append(loc, owner=owner, lease_s=30.0),
     )
-    real_write = di._write_gen_shingles
+    real_write = di.write_payload
 
     def stall_and_lose(sh, path):
         real_write(sh, path)
-        monkeypatch.setattr(di, "_write_gen_shingles", real_write)
+        monkeypatch.setattr(di, "write_payload", real_write)
         fake_clock["t"] += 31.0  # A's lease expires mid-transaction
         with exclusive_append(root, owner="usurper", lease_s=600.0):
             pass  # takeover + clean release — A's payload is gone
 
-    monkeypatch.setattr(di, "_write_gen_shingles", stall_and_lose)
+    monkeypatch.setattr(di, "write_payload", stall_and_lose)
     with pytest.raises(FencedOut):
-        di._ingest_generation(spark, root, name, tag, delta)
+        di._ingest_generation(spark, root, delta)
 
     # the fence held: readers still on the complete BASE snapshot
     assert current_snapshot(root) == base_snap
 
     # clean retry converges to the uncrashed operator bit-for-bit
     monkeypatch.setattr(di, "exclusive_append", exclusive_append)
-    di._ingest_generation(spark, root, name, tag, delta)
-    snap = current_snapshot(root)
+    di._ingest_generation(spark, root, delta)
     got = {
         tuple(r)
-        for r in di._probe_index(
-            spark,
-            snap["bands"],
-            snap["shingle_dirs"],
-            f"{root}/stage/delta_bands",
-            snap["n_indexed"],
-        ).collect()
+        for r in di._probe_index(spark, root, current_snapshot(root)).collect()
     }
     want = {
         tuple(r)
@@ -515,69 +510,53 @@ def test_pushdown_keys_cost_bound(tmp_path, spark):
 
 
 def test_vacuum_ann_tier_after_compaction(spark, sf_dir):
-    """The ANN tier's manifests name root-relative run dirs
-    (list_dirs), so vacuum_unreferenced works with the identity
-    mapping: after append + compaction, keep-last-1 vacuum must delete
-    the superseded 'lists' and 'lists_g1' runs and the stored query
-    must answer identically from the compacted snapshot."""
-    from pyspark.sql import functions as F
-
-    from tijdloze_musicbrainz_spark.plans.lifecycle import current_snapshot
+    """The ANN tier names its code-list runs, codebook and centroids in
+    the shared manifest schema, so vacuum_unreferenced needs no
+    tier-specific mapping: after append + compaction, keep-last-1
+    vacuum must delete the superseded 'lists' and 'lists_g1' runs,
+    keep the codebook and centroids, and the stored query must answer
+    identically from the compacted snapshot."""
+    from tijdloze_musicbrainz_spark.plans.lifecycle import (
+        compact_partitioned,
+        compact_snapshot,
+        index_root,
+        role_dirs,
+    )
     from tijdloze_musicbrainz_spark.plans.similarity import (
         pq_lifecycle as pq,
     )
 
     base = pq._pq_vecs(spark, sf_dir)
     subs = pq._pq_subs(base)
-    root = pq._pq_index_root(sf_dir, "ivfpq_vac")
+    root = index_root(sf_dir, "ivfpq_vac")
     pq._pq_write_index(
         base, subs, pq._pq_seed_codebook(base, subs), pq._ivf_cents(base),
         root,
     )
     delta = pq._pq_delta(base)
-    pq._pq_ingest_batch(
-        delta,
-        spark.read.parquet(f"{root}/codebook"),
-        spark.read.parquet(f"{root}/cents"),
-        root,
-    )
+    pq._pq_ingest_batch(delta, *pq._pq_model(spark, root), root)
     corpus = base.select("vec_id", "v").unionByName(
         delta.select("vec_id", "v")
     )
     topk, _, _, _ = pq._pq_query_stored(spark, base, subs, root, corpus)
     before = {tuple(r) for r in topk.collect()}
 
-    from tijdloze_musicbrainz_spark.plans.lifecycle import (
-        commit_snapshot,
-        compact_partitioned,
-        vacuum_unreferenced,
-    )
-    from tijdloze_musicbrainz_spark.sources.bucketing import (
-        exclusive_append,
-    )
-
-    with exclusive_append(root, owner="pq_vac_compact") as lease:
-        snap = current_snapshot(root)
-        compact_partitioned(
-            spark,
-            [f"{root}/{d}" for d in snap["list_dirs"]],
-            f"{root}/lists_compacted",
-            "cent_id",
-        )
-        commit_snapshot(
-            root, {**snap, "list_dirs": ["lists_compacted"]}, lease=lease
-        )
-
-    report = vacuum_unreferenced(
+    compact_snapshot(
         root,
-        lambda s: set(s["list_dirs"]),
-        protected=("codebook", "cents"),
-        keep_snapshots=1,
+        "runs",
+        "lists_compacted",
+        lambda snap, dst: compact_partitioned(
+            spark, role_dirs(root, snap, "runs"), dst, "cent_id"
+        ),
+        owner="pq_vac_compact",
     )
+
+    report = vacuum_unreferenced(root, keep_snapshots=1)
     assert report["deleted"] == ["lists", "lists_g1"], report
     assert not os.path.exists(f"{root}/lists")
     assert not os.path.exists(f"{root}/lists_g1")
-    assert os.path.exists(f"{root}/lists_compacted")
+    for kept in ("lists_compacted", "codebook", "cents"):
+        assert os.path.exists(f"{root}/{kept}"), kept
 
     topk2, _, _, _ = pq._pq_query_stored(spark, base, subs, root, corpus)
     after = {tuple(r) for r in topk2.collect()}
@@ -585,76 +564,69 @@ def test_vacuum_ann_tier_after_compaction(spark, sf_dir):
 
 
 def test_vacuum_cc_tier_after_label_compaction(spark, sf_dir):
-    """The cluster tier's mapping covers bucketed block-run TABLES
-    (name → dir), hive label/remap/shingle subtrees, and the pointer-
-    published flat label store: after two generations + the label
-    compaction, keep-last-1 vacuum must drop the pre-merge label
-    chain's unreferenced entries while the compacted flat store keeps
-    resolving identically."""
-    import re
-
+    """The cluster tier's manifest names its block runs, payload,
+    labels, remap journal and staging like every other tier, and the
+    label fold is an ordinary snapshot commit: after two generations +
+    the label compaction, keep-last-1 vacuum must drop exactly the
+    pre-fold label chain, the remap journal and the superseded staging
+    while the folded store keeps resolving identically."""
     from pyspark.sql import functions as F
 
     from tijdloze_musicbrainz_spark.plans import cc_index as cc
     from tijdloze_musicbrainz_spark.plans.lifecycle import (
+        compact_snapshot,
         current_snapshot,
-        current_store,
-        publish_store,
         vacuum_unreferenced,
-    )
-    from tijdloze_musicbrainz_spark.sources.bucketing import (
-        exclusive_append,
     )
     from tijdloze_musicbrainz_spark.sources.store_io import get_store_io
 
     name = "cc_vac"
-    t_blocks, paths, docs_all, pay, _ = cc._build_base(spark, sf_dir, name)
-    root = paths["root"]
+    root, docs_all, pay, _ = cc._build_base(spark, sf_dir, name)
     for gen, pred in (
         (1, F.col("doc_id") % cc.CC_BATCH_MOD == cc.CC_DELTA_MOD),
         (2, F.col("doc_id") % cc.CC_BATCH_MOD == 0),
     ):
-        cc._ingest_and_merge_generation(
-            spark, t_blocks, paths, docs_all, pay, pred, gen
-        )
-    snap = current_snapshot(root)
-    gens = snap["gens"]
-    compacted = f"{paths['labels']}_compacted_g{gens[-1]}"
-    with exclusive_append(root, owner="cc_vac_compact") as lease:
-        cc._resolve_labels(spark, paths, gens).write.parquet(compacted)
-        lease.assert_held("label-store publish")
-        publish_store(paths["labels"], compacted)
-    flat_before = {
+        cc._ingest_and_merge_generation(spark, root, docs_all, pay, pred, gen)
+    chain = {
         tuple(r)
-        for r in spark.read.schema("doc_id bigint, cluster_id bigint")
-        .parquet(current_store(paths["labels"], ""))
+        for r in cc._snapshot_labels(spark, root, current_snapshot(root))
         .collect()
     }
+    compact_snapshot(
+        root,
+        "labels",
+        "labels/compacted_g2",
+        lambda snap, dst: cc._snapshot_labels(spark, root, snap)
+        .write.parquet(dst),
+        owner="cc_vac_compact",
+        remaps=[],
+    )
+    snap = current_snapshot(root)
+    assert snap["labels"] == ["labels/compacted_g2"] and snap["remaps"] == []
+    flat_before = {
+        tuple(r) for r in cc._snapshot_labels(spark, root, snap).collect()
+    }
+    assert flat_before == chain and flat_before
 
-    def children(s: dict) -> set[str]:
-        live = {"shingles", "stage"}
-        for run in s["blocks"]:
-            m = re.search(r"_g(\d+)$", run)
-            live.add(f"blocks_g{m.group(1)}" if m else "blocks_g0")
-        # the remap chain and per-gen labels of the COMMITTED gens,
-        # plus the pointer-published flat store
-        live |= {f"remaps/gen={g}" for g in s["gens"]}
-        live |= {f"labels/gen={g}" for g in (0, *s["gens"])}
-        live.add(os.path.relpath(current_store(paths["labels"], ""), root))
-        return live
-
-    report = vacuum_unreferenced(root, children, keep_snapshots=1)
-    # nothing a committed manifest or the label pointer names is gone
-    assert report["deleted"] == [], report
-    # an abandoned orphan label generation IS collected
+    report = vacuum_unreferenced(root, keep_snapshots=1)
+    # exactly what the folded snapshot no longer names is gone
+    assert report["deleted"] == [
+        "labels/gen=0", "labels/gen=1", "labels/gen=2", "remaps",
+        "stage/delta_1", "stage/delta_ids_1", "stage/delta_ids_2",
+    ], report
+    for kept in ("blocks_g0", "blocks_g1", "blocks_g2", "shingles/gen=2",
+                 "labels/compacted_g2", "stage/delta_2"):
+        assert os.path.exists(os.path.join(root, kept)), kept
+    # a second pass finds nothing; an abandoned orphan label
+    # generation IS collected
+    assert vacuum_unreferenced(root, keep_snapshots=1)["deleted"] == []
     get_store_io().put_atomic(f"{root}/labels/gen=9/part-0.parquet", "x")
-    report = vacuum_unreferenced(root, children, keep_snapshots=1)
+    report = vacuum_unreferenced(root, keep_snapshots=1)
     assert report["deleted"] == ["labels/gen=9"], report
 
     flat_after = {
         tuple(r)
-        for r in spark.read.schema("doc_id bigint, cluster_id bigint")
-        .parquet(current_store(paths["labels"], ""))
+        for r in cc._snapshot_labels(spark, root, current_snapshot(root))
         .collect()
     }
-    assert flat_after == flat_before and flat_after
+    assert flat_after == flat_before

@@ -34,11 +34,11 @@ import subprocess
 
 import pytest
 
-from tijdloze_musicbrainz_spark.plans import lifecycle
 from tijdloze_musicbrainz_spark.plans.lifecycle import (
     SnapshotConflict,
     commit_snapshot,
     current_snapshot,
+    manifest,
     vacuum_unreferenced,
 )
 from tijdloze_musicbrainz_spark.sources import bucketing as bk
@@ -146,17 +146,15 @@ def test_leaseless_commit_never_reclaims_a_pending_manifest(tmp_path):
 
 def test_vacuum_rejects_keep_snapshots_below_one(tmp_path):
     root = str(tmp_path / "idx")
-    commit_snapshot(root, {"dirs": ["g0"]})
+    commit_snapshot(root, manifest(runs=["g0"]))
     io = get_store_io()
     io.put_atomic(f"{root}/g0/part-0", "live store")
     for bad in (0, -1):
         with pytest.raises(ValueError, match="keep_snapshots"):
-            vacuum_unreferenced(
-                root, lambda snap: set(snap["dirs"]), keep_snapshots=bad
-            )
+            vacuum_unreferenced(root, keep_snapshots=bad)
     # nothing was deleted — the published store and manifest survive
     assert os.path.exists(f"{root}/g0/part-0")
-    assert current_snapshot(root) == {"dirs": ["g0"]}
+    assert current_snapshot(root) == manifest(runs=["g0"])
 
 
 # ── 4. release retries through transient contention ──────────────────
@@ -231,21 +229,23 @@ def test_commit_renews_first_so_takeover_cannot_straddle_the_publish(
     test fails (B acquires inside the gap)."""
     root = str(tmp_path / "idx")
     commit_snapshot(root, {"state": "base"})
-    real_publish = lifecycle.publish_store
+    io = get_store_io()
+    real_put = io.put_atomic
 
     with exclusive_append(root, owner="a", lease_s=60.0) as lease_a:
         fake_clock["t"] += 59.5  # 0.5 s of runway left
 
-        def descheduled_then_flip(r, target):
-            # the zombie gap: between the fence re-check and the flip,
-            # 25 s pass and B probes the lock
-            fake_clock["t"] += 25.0
-            with pytest.raises(ConcurrentAppendError):
-                with exclusive_append(root, owner="b", lease_s=60.0):
-                    pass
-            real_publish(r, target)
+        def descheduled_then_flip(path, text):
+            if path.endswith("_CURRENT"):
+                # the zombie gap: between the fence re-check and the
+                # pointer flip, 25 s pass and B probes the lock
+                fake_clock["t"] += 25.0
+                with pytest.raises(ConcurrentAppendError):
+                    with exclusive_append(root, owner="b", lease_s=60.0):
+                        pass
+            real_put(path, text)
 
-        monkeypatch.setattr(lifecycle, "publish_store", descheduled_then_flip)
+        monkeypatch.setattr(io, "put_atomic", descheduled_then_flip)
         commit_snapshot(root, {"state": "a_safe"}, lease=lease_a)
         monkeypatch.undo()
     assert current_snapshot(root) == {"state": "a_safe"}

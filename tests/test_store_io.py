@@ -117,12 +117,15 @@ def test_snapshot_commit_chain_and_orphan_reclaim_through_fake(fake_io):
         commit_snapshot,
         current_snapshot,
         current_snapshot_version,
+        manifest,
     )
 
     root = "/fake/index"
     assert current_snapshot(root) is None
-    assert commit_snapshot(root, {"bands": ["b0"], "n_indexed": 10}) == 0
-    assert commit_snapshot(root, {"bands": ["b0", "g1"], "n_indexed": 12}) == 1
+    assert commit_snapshot(root, manifest(runs=["b0"], n_indexed=10)) == 0
+    assert commit_snapshot(
+        root, manifest(runs=["b0", "g1"], n_indexed=12)
+    ) == 1
     assert current_snapshot_version(root) == 1
     assert current_snapshot(root)["n_indexed"] == 12
     # manifests are conditional puts (the commit-race guard)
@@ -141,12 +144,12 @@ def test_snapshot_commit_chain_and_orphan_reclaim_through_fake(fake_io):
     fake_io.put_if_absent(f"{root}/_snapshots/v2.json", '{"orphan": true}')
     assert current_snapshot_version(root) == 1
     with pytest.raises(SnapshotConflict):
-        commit_snapshot(root, {"bands": ["c"], "n_indexed": 12})
+        commit_snapshot(root, manifest(runs=["c"], n_indexed=12))
     with exclusive_append(root, owner="recovery") as lease:
         assert commit_snapshot(
-            root, {"bands": ["c"], "n_indexed": 12}, lease=lease
+            root, manifest(runs=["c"], n_indexed=12), lease=lease
         ) == 2
-    assert current_snapshot(root)["bands"] == ["c"]
+    assert current_snapshot(root)["runs"] == ["c"]
 
 
 def test_append_lock_mutual_exclusion_through_fake(fake_io):

@@ -100,10 +100,8 @@ def _sequential_twin(spark, suffix: str) -> list:
     its own root — the convergence oracle for the raced root."""
     from tijdloze_musicbrainz_spark.plans import dedup_index as di
 
-    t_bands, sh, delta_path, n = di._build_and_ingest(
-        spark, TEST_SF_DIR, f"mh_race2p_seq{suffix}"
-    )
-    rows = di._probe_index(spark, t_bands, sh, delta_path, n).collect()
+    built = di._build_and_ingest(spark, TEST_SF_DIR, f"mh_race2p_seq{suffix}")
+    rows = di._probe_index(spark, *built).collect()
     return sorted(
         [r["doc_a"], r["doc_b"], round(r["jaccard"], 9), r["n_indexed"]]
         for r in rows

@@ -32,10 +32,11 @@ Storage layout (the 100 TB story):
   handful of (old → new) label moves, and readers resolve labels
   through the remap generations IN ORDER (each generation's domain is the PREVIOUS generation's
   resolved labels — a chained fold, one broadcast-sized join per
-  generation). ``compact_label_store`` is the scheduled maintenance
-  that folds the chain back into a flat base (the same role
-  compaction plays for the other two index tiers' small files,
-  applied to the journal depth).
+  generation). The label compaction (dedup_cluster_label_compact)
+  is the scheduled maintenance that folds the chain back into one
+  flat store and commits it as the snapshot's only label dir with an
+  empty journal (the same role compaction plays for the other two
+  index tiers' small files, applied to the journal depth).
 
 Merge correctness: contracting every stored component to its label
 node is a connectivity-preserving homomorphism, so running
@@ -65,7 +66,7 @@ import os
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.bucketing import exclusive_append, write_bucketed
+from ..sources.bucketing import exclusive_append
 from ..sources.store_io import get_store_io
 from .dedup import (
     _SHINGLES_SQL,
@@ -75,15 +76,19 @@ from .dedup import (
     words_col,
 )
 from .lifecycle import (
+    BucketedTier,
     commit_snapshot,
+    compact_snapshot,
     current_snapshot,
-    current_store,
     index_root,
-    publish_store,
-    pushdown_keys,
+    manifest,
+    probe_pairs,
     read_delta_key_manifest,
-    sf_tag,
-    write_delta_key_manifest,
+    role_dirs,
+    stage_delta,
+    verified_pairs,
+    write_payload,
+    write_run,
 )
 from .registry import register
 from .util import checkpointed_payload, t
@@ -94,6 +99,9 @@ from .util import checkpointed_payload, t
 CC_DELTA_MOD = 10
 CC_BATCH_MOD = 20
 CC_INDEX_BUCKETS = 16
+# the block tier's run spec: bucketed on the 5-token block key,
+# verified at Jaccard >= 0.9 (the dedup_cluster_components threshold)
+_CC = BucketedTier("blocks", "blk", "string", CC_INDEX_BUCKETS, 0.9)
 
 # Broadcast budget for the base-vs-base blocked self-join's build
 # side. Same exact-count gating idea as the graph tier's
@@ -185,7 +193,7 @@ def _pairs_of(
     ``n_rows``/``est_bytes``: exact payload row count and a measured
     byte estimate, when the caller has them in hand (the observed
     checkpoint makes both free — checkpointed_payload). The checkpoint
-    that pins the payload (see _build_base) is a LogicalRDD with no
+    that pins the payload (see _cluster_base) is a LogicalRDD with no
     size stats, so the planner can no longer auto-broadcast the build
     side of this self-join the way it did off the scan-backed plan —
     the gated hint restores that decision EXACTLY where the
@@ -213,35 +221,32 @@ def _pairs_of(
             (F.col("a.blk") == F.col("b.blk"))
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        .filter(jac >= 0.9)
+        .filter(jac >= _CC.threshold)
         .select(
             F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         )
     )
 
 
-def _build_base(
-    spark: SparkSession, sf_dir: str, name: str
-) -> tuple[str, dict[str, str], DataFrame, DataFrame, int]:
-    """Build the base cluster store (bucketed blocks + shingle payload
-    + labels) over the non-arriving 90% and commit it as the index's
-    first snapshot. Returns (blocks_table, paths, docs_all_ids,
-    payload, n_base). ``n_base`` follows the shared accounting rule
-    (plans/lifecycle.py): counted from the DataFrame in hand at build
-    time, never by re-scanning the store — and since r13 it lives in
-    the snapshot manifest (the commit stats the rule always named)."""
+def _cluster_base(
+    spark: SparkSession, sf_dir: str, labels_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame, int]:
+    """The ONE corpus-linear clustering pass over the non-arriving
+    90%, shared by the batch store and the streaming restart proof:
+    checkpoint the payload, pair the base blocks, run connected
+    components, and write every base document's label to
+    ``labels_dir``. Returns (docs_all_ids, payload, base_payload,
+    n_base); ``n_base`` follows the shared accounting rule — counted
+    from the label write in hand, never by re-scanning the store."""
     docs_all = t(spark, sf_dir, "documents").select("doc_id")
-    # Payload is computed ONCE: this pipeline issues ~40 separate
+    # Payload is computed ONCE: the lifecycle issues ~40 separate
     # write/count actions per run, and without the checkpoint every
     # one re-ran the tokenize+shingle subtree as a single scan task
     # (bare fan_out alone regressed 8.4 s -> 10.6 s in r15 because the
-    # injected exchange was ALSO paid per action; checkpointing after
-    # the fan-out pays tokenize+shingle+exchange exactly once, at
-    # cluster parallelism, and every action reads the materialized
-    # rows instead). r16: the checkpoint is SIZED TO ITS DATA
-    # (checkpointed_payload — 7.7 MB no longer rides 32 partitions
-    # into ~100 downstream jobs), and the observation rides the
-    # checkpoint job so the broadcast-gate count costs no action.
+    # injected exchange was ALSO paid per action). The checkpoint is
+    # SIZED TO ITS DATA (checkpointed_payload), and the observation
+    # rides the checkpoint job so the broadcast-gate count costs no
+    # action.
     docs = (
         t(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
@@ -256,23 +261,12 @@ def _build_base(
         ],
     )
     base_pay = pay.filter(F.col("doc_id") % CC_DELTA_MOD != 0)
-
-    tag = sf_tag(sf_dir)
-    root = index_root(sf_dir, name)
-    t_blocks = f"{name}_blocks_{tag}"
-    paths = {
-        "root": root,
-        "blocks": f"{root}/blocks_g0",
-        "shingles": f"{root}/shingles",
-        "labels": f"{root}/labels",
-        "remaps": f"{root}/remaps",
-        "stage": f"{root}/stage",
-    }
-
-    # -- build: the ONE corpus-linear clustering pass over the base ----
     base_labels, _ = connected_components(
-        _pairs_of(base_pay, est_bytes=_subset_bytes(pay_m, "n_base_pay"))
-        .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+        _pairs_of(
+            base_pay,
+            n_rows=int(pay_m["n_base_pay"] or 0),
+            est_bytes=_subset_bytes(pay_m, "n_base_pay"),
+        ).select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     )
     base_ids = docs_all.filter(F.col("doc_id") % CC_DELTA_MOD != 0)
     # the labels write preserves base_ids 1:1 (left join on a unique
@@ -285,218 +279,49 @@ def _build_base(
         "doc_id", F.coalesce("label", "doc_id").alias("cluster_id")
     ).observe(
         n_base_obs, F.count(F.lit(1)).alias("n")
-    ).write.parquet(f"{paths['labels']}/gen=0")
-    write_bucketed(
-        base_pay.select("blk", "doc_id"),
-        t_blocks,
-        bucket_cols=["blk"],
-        num_buckets=CC_INDEX_BUCKETS,
-        sort_cols=["blk"],
-        location=paths["blocks"],
+    ).write.parquet(labels_dir)
+    return docs_all, pay, base_pay, int(n_base_obs.get["n"] or 0)
+
+
+def _build_base(
+    spark: SparkSession, sf_dir: str, name: str
+) -> tuple[str, DataFrame, DataFrame, int]:
+    """Build the base cluster store (bucketed blocks + shingle payload
+    + labels) and commit it as the index's first snapshot. Returns
+    (root, docs_all_ids, payload, n_base)."""
+    root = index_root(sf_dir, name)
+    docs_all, pay, base_pay, n_base = _cluster_base(
+        spark, sf_dir, f"{root}/labels/gen=0"
     )
-    base_pay.select("doc_id", "sgs").write.parquet(
-        f"{paths['shingles']}/gen=0"
-    )
-    n_base = int(n_base_obs.get["n"] or 0)
+    write_run(base_pay.select("blk", "doc_id"), f"{root}/blocks_g0", _CC)
+    write_payload(base_pay.select("doc_id", "sgs"), f"{root}/shingles/gen=0")
     commit_snapshot(
         root,
-        {
-            "blocks": [t_blocks],
-            "gens": [],
-            "n_indexed": n_base,
-            "key_stats": None,
-        },
+        manifest(
+            runs=["blocks_g0"],
+            payload=["shingles/gen=0"],
+            labels=["labels/gen=0"],
+            n_indexed=n_base,
+        ),
     )
-    return t_blocks, paths, docs_all, pay, n_base
-
-
-def _block_runs(t_blocks: str, gens: list[int]) -> list[str]:
-    """The block index's run set (base table + one immutable bucketed
-    table per merged generation) — the cc twin of the band index's
-    LSM-style levels (dedup_index._probe_index)."""
-    return [t_blocks, *(f"{t_blocks}_g{g}" for g in gens)]
-
-
-def _shingle_dirs(paths: dict[str, str], gens: list[int]) -> list[str]:
-    return [f"{paths['shingles']}/gen=0"] + [
-        f"{paths['shingles']}/gen={g}" for g in gens
-    ]
-
-
-def _write_gen_blocks(staged: DataFrame, table: str, location: str) -> None:
-    """One generation's block run — deterministic path, drop-then-
-    write (idempotent on recovery replay). Module-level so the crash
-    test can fail the transaction between store writes."""
-    write_bucketed(
-        staged.select("blk", "doc_id"),
-        table,
-        bucket_cols=["blk"],
-        num_buckets=CC_INDEX_BUCKETS,
-        sort_cols=["blk"],
-        location=location,
-    )
-
-
-def _write_gen_shingles(staged: DataFrame, path: str) -> None:
-    staged.select("doc_id", "sgs").write.mode("overwrite").parquet(path)
-
-
-def _ingest_batch(
-    spark: SparkSession,
-    t_blocks: str,
-    paths: dict[str, str],
-    docs_all: DataFrame,
-    pay: DataFrame,
-    batch_pred,
-    gen: int,
-) -> int:
-    """Stage the arriving batch's payload ONCE (both the generation's
-    block run and the later probe read the staged files) and land the
-    generation's stores at gen-unique paths NO READER RESOLVES YET —
-    visibility comes only from the snapshot commit that
-    :func:`_ingest_and_merge_generation` issues after the merge also
-    lands. Every write is a deterministic-path overwrite, so a
-    recovery replay converges. Returns the batch's doc count (the
-    O(delta) accounting term)."""
-    pay.filter(batch_pred).write.mode("overwrite").parquet(
-        f"{paths['stage']}/delta_{gen}"
-    )
-    batch_ids = docs_all.filter(batch_pred)
-    # the accounting count rides the staged-ids write (same rows) —
-    # one job instead of two (r15 verdict item 3)
-    n_batch_obs = Observation()
-    batch_ids.observe(n_batch_obs, F.count(F.lit(1)).alias("n")).write.mode(
-        "overwrite"
-    ).parquet(f"{paths['stage']}/delta_ids_{gen}")
-    staged = spark.read.schema(
-        "doc_id bigint, blk string, sgs array<string>"
-    ).parquet(f"{paths['stage']}/delta_{gen}")
-    # probe-pushdown sidecar: the batch's distinct block keys, so the
-    # later probe can push In(blk, ...) into the stored block scan
-    # without launching a job (plans/lifecycle.py design note)
-    write_delta_key_manifest(staged, "blk", f"{paths['stage']}/delta_{gen}")
-    _write_gen_blocks(
-        staged, f"{t_blocks}_g{gen}", f"{paths['root']}/blocks_g{gen}"
-    )
-    _write_gen_shingles(staged, f"{paths['shingles']}/gen={gen}")
-    return int(n_batch_obs.get["n"] or 0)
-
-
-def _candidate_pairs(probes: DataFrame, stored_blocks: DataFrame) -> DataFrame:
-    """Oriented candidate pairs from one store's blk equi-join (no
-    dedup here — callers union runs first, then distinct once)."""
-    return (
-        probes.join(stored_blocks, "blk")
-        .filter(F.col("probe_id") != F.col("doc_id"))
-        .select(
-            F.least("probe_id", "doc_id").alias("doc_a"),
-            F.greatest("probe_id", "doc_id").alias("doc_b"),
-        )
-    )
-
-
-def _verify_pairs(cand: DataFrame, stored_sh: DataFrame) -> DataFrame:
-    """Exact-Jaccard verification over (doc_id, sgs) shingle sets
-    fetched by id for candidate pairs only."""
-    sh_a = stored_sh.select(
-        F.col("doc_id").alias("doc_a"), F.col("sgs").alias("sgs_a")
-    )
-    sh_b = stored_sh.select(
-        F.col("doc_id").alias("doc_b"), F.col("sgs").alias("sgs_b")
-    )
-    return (
-        cand.join(sh_a, "doc_a")
-        .join(sh_b, "doc_b")
-        .filter(jaccard(F.col("sgs_a"), F.col("sgs_b")) >= 0.9)
-        .select("doc_a", "doc_b")
-    )
-
-
-def _verified_pairs(
-    probes: DataFrame, stored_blocks: DataFrame, stored_sh: DataFrame
-) -> DataFrame:
-    """Verified near-dup pairs with at least one probe endpoint, from
-    whatever store the caller reads: candidates = one equi-join of
-    probe (probe_id, blk) rows against the stored (blk, doc_id) index,
-    verification = exact Jaccard over (doc_id, sgs) shingle sets
-    fetched by id. Shared by the batch path (bucketed runs + merge
-    hint, via _probe_pairs) and the streaming path (ingest_batch
-    subtrees) so the merge semantics live once."""
-    return _verify_pairs(
-        _candidate_pairs(probes, stored_blocks).distinct(), stored_sh
-    )
-
-
-def _probe_pairs(
-    spark: SparkSession,
-    blocks_runs: str | list[str],
-    paths: dict[str, str],
-    gen: int,
-) -> DataFrame:
-    """Batch-path probe: the staged delta blocks (signed once at
-    ingest) merge-join each bucketed block run in place — no shuffle
-    of the index; candidates union across runs (band-key equality
-    distributes over the run set), one distinct, one verify. Pure plan
-    construction (the bucketed-scan + sort-merge shape is pinned in
-    tests/test_cc_index.py)."""
-    runs = [blocks_runs] if isinstance(blocks_runs, str) else list(blocks_runs)
-    probes = (
-        spark.read.schema("doc_id bigint, blk string")
-        .parquet(f"{paths['stage']}/delta_{gen}")
-        .select(F.col("doc_id").alias("probe_id"), "blk")
-    )
-    stored_sh = spark.read.schema("doc_id bigint, sgs array<string>").parquet(
-        *_shingle_dirs(paths, list(range(1, gen + 1)))
-    )
-    # small-delta pushdown: the ingest-time key sidecar becomes a
-    # literal In(blk, ...) predicate on every stored run's scan —
-    # identical results (non-matching blocks cannot join a probe), row
-    # groups and bucket files outside the batch's key set skipped
-    # (see dedup_index._probe_index for the full story). COST-BOUNDED
-    # (r14): pushed only below the measured break-even key count —
-    # a near-cap In list made this probe ~9x slower than the full
-    # bucketed scan (plans/lifecycle.py PROBE_PUSHDOWN_MAX_IN).
-    batch_keys = pushdown_keys(f"{paths['stage']}/delta_{gen}", "blk")
-
-    def _run_cand(table: str) -> DataFrame:
-        stored = spark.table(table)
-        if batch_keys:
-            stored = stored.filter(F.col("blk").isin(batch_keys))
-        return _candidate_pairs(probes, stored.hint("merge"))
-
-    cand = _run_cand(runs[0])
-    for run in runs[1:]:
-        cand = cand.unionByName(_run_cand(run))
-    return _verify_pairs(cand.distinct(), stored_sh)
+    return root, docs_all, pay, n_base
 
 
 def _resolve_labels(
-    spark: SparkSession, paths: dict[str, str], gens: list[int]
+    spark: SparkSession, label_dirs: list[str], remap_dirs: list[str]
 ) -> DataFrame:
     """Current labels = stored labels folded through the remap
     generations IN ORDER (each generation's domain is the previous
     generation's resolved labels). One broadcast-sized join per
-    generation — compact_label_store bounds the chain depth.
-
-    Label rows live in per-generation subdirectories
-    (``labels/gen=N``, the crash-atomic ingest's invisible-until-
-    committed unit); the read lists exactly the base generation plus
-    the requested remap generations. A paths dict without ``root``
-    (the swap race test's flat fixture) reads ``labels`` as one flat
-    store — the pre-r13 layout."""
-    if "root" in paths:
-        label_dirs = [f"{paths['labels']}/gen=0"] + [
-            f"{paths['labels']}/gen={g}" for g in gens
-        ]
-    else:
-        label_dirs = [paths["labels"]]
+    generation — the label compaction bounds the chain depth. The
+    batch store lists its dirs from the snapshot
+    (:func:`_snapshot_labels`); the streaming restart proof lists its
+    per-micro-batch subtrees."""
     cur = spark.read.schema("doc_id bigint, cluster_id bigint").parquet(
         *label_dirs
     )
-    for g in gens:
-        rm = spark.read.schema("old_label bigint, new_label bigint").parquet(
-            f"{paths['remaps']}/gen={g}"
-        )
+    for d in remap_dirs:
+        rm = spark.read.schema("old_label bigint, new_label bigint").parquet(d)
         cur = cur.join(
             F.broadcast(rm), cur.cluster_id == rm.old_label, "left"
         ).select(
@@ -505,91 +330,108 @@ def _resolve_labels(
     return cur
 
 
+def _snapshot_labels(spark: SparkSession, root: str, snap: dict) -> DataFrame:
+    """The labels a reader of ``snap`` sees: its label dirs folded
+    through its remap journal."""
+    return _resolve_labels(
+        spark, role_dirs(root, snap, "labels"), role_dirs(root, snap, "remaps")
+    )
+
+
 def _merge_generation(
-    spark: SparkSession,
-    t_blocks: str,
-    paths: dict[str, str],
-    gens_done: list[int],
-    gen: int,
+    spark: SparkSession, root: str, pending: dict, ids_dir: str, gen: int
 ) -> None:
     """Merge generation ``gen`` into the store: pair its arrivals
-    against the stored block index (the writer's own view — base run
-    plus every generation through ``gen``, including the one this
-    transaction just staged), contract stored endpoints to their
-    CURRENT labels (resolved through the generations already merged —
-    using a stale label here would miss bridges through previously
-    merged components), run connected components on the contracted
-    graph, write the batch's labels to this generation's own label
-    dir, and journal the (old → new) label moves as this generation's
-    remap. Both writes are deterministic-path overwrites: invisible
-    until the snapshot commit, idempotent on recovery replay."""
-    new_pairs = _probe_pairs(
-        spark, _block_runs(t_blocks, [*gens_done, gen]), paths, gen
-    )
-    current = _resolve_labels(spark, paths, gens_done)
+    against the writer's own view ``pending`` (the committed snapshot
+    plus the run, payload and staging this transaction just landed),
+    contract stored endpoints to their CURRENT labels (resolved
+    through the generations already committed — a stale label here
+    would miss bridges through previously merged components), run
+    connected components on the contracted graph, write the batch's
+    labels to this generation's own label dir, and journal the
+    (old → new) label moves as this generation's remap. Both writes
+    are deterministic-path overwrites: invisible until the snapshot
+    commit, idempotent on recovery replay."""
+    new_pairs = probe_pairs(spark, root, pending, _CC).select("doc_a", "doc_b")
+    current = _snapshot_labels(spark, root, pending)
     # INVARIANT: ``merged`` must be MATERIALIZED before the label
-    # write below — it reads the label store via _resolve_labels, and
-    # a lazy plan would re-resolve labels AFTER the write, journaling
-    # against post-write state. connected_components already
-    # localCheckpoints its fixpoint, but that is an implementation
-    # detail of CC; the explicit checkpoint here makes the ordering
-    # dependency local and regression-proof (r11 ADVICE).
+    # write below — it reads the label store, and a lazy plan would
+    # re-resolve labels AFTER the write, journaling against post-write
+    # state. connected_components already localCheckpoints its
+    # fixpoint, but that is an implementation detail of CC; the
+    # explicit checkpoint here makes the ordering dependency local and
+    # regression-proof (r11 ADVICE).
     merged = _contract_and_merge(new_pairs, current).localCheckpoint()
 
-    batch_ids = spark.read.schema("doc_id bigint").parquet(
-        f"{paths['stage']}/delta_ids_{gen}"
-    )
+    batch_ids = spark.read.schema("doc_id bigint").parquet(ids_dir)
     batch_ids.join(merged, batch_ids.doc_id == merged.id, "left").select(
         "doc_id", F.coalesce("label", "doc_id").alias("cluster_id")
-    ).write.mode("overwrite").parquet(f"{paths['labels']}/gen={gen}")
+    ).write.mode("overwrite").parquet(f"{root}/labels/gen={gen}")
     _journal_moves(merged, batch_ids).write.mode("overwrite").parquet(
-        f"{paths['remaps']}/gen={gen}"
+        f"{root}/remaps/gen={gen}"
     )
 
 
 def _ingest_and_merge_generation(
     spark: SparkSession,
-    t_blocks: str,
-    paths: dict[str, str],
+    root: str,
     docs_all: DataFrame,
     pay: DataFrame,
     batch_pred,
     gen: int,
 ) -> int:
     """The cluster tier's CRASH-ATOMIC generation transaction (r12
-    verdict item 1): under the index's single-writer lock, stage +
-    land the generation's block run and shingle payload
-    (:func:`_ingest_batch`), merge it into the clustering — labels +
-    remap journal (:func:`_merge_generation`) — and make all five
-    stores plus the accounting count and key stats visible in ONE
-    snapshot commit. A writer dying between ANY two steps leaves the
-    previous snapshot fully intact (readers resolve only committed
+    verdict item 1): under the index's single-writer lease, stage the
+    arriving batch's payload ONCE (the generation's block run, its
+    shingle payload and the probe all read the staged files), land
+    the run and payload, merge the batch into the clustering — labels
+    + remap journal (:func:`_merge_generation`) — and make every store
+    plus the accounting count and key stats visible in ONE snapshot
+    commit. A writer dying between ANY two steps leaves the previous
+    snapshot fully intact (readers resolve only committed
     generations); recovery re-runs this function — every write is a
     deterministic-path overwrite — and the commit reclaims a crashed
-    predecessor's orphan manifest. gens_done is read from the
-    committed snapshot, so a recovery replay contracts through exactly
-    the generations a reader would."""
-    root = paths["root"]
+    predecessor's orphan manifest. The merge contracts through the
+    committed snapshot's labels, so a recovery replay contracts
+    through exactly the generations a reader would. Returns the
+    batch's doc count (the O(delta) accounting term)."""
+    stage, ids_dir = f"stage/delta_{gen}", f"{root}/stage/delta_ids_{gen}"
+    run, sh = f"blocks_g{gen}", f"shingles/gen={gen}"
     with exclusive_append(root, owner=f"cc_gen{gen}") as lease:
         snap = current_snapshot(root)
-        gens_done = snap["gens"]
-        n_batch = _ingest_batch(
-            spark, t_blocks, paths, docs_all, pay, batch_pred, gen
+        staged = stage_delta(
+            spark, pay.filter(batch_pred), f"{root}/{stage}", _CC.key
         )
+        # the accounting count rides the staged-ids write (same rows) —
+        # one job instead of two (r15 verdict item 3)
+        n_batch_obs = Observation()
+        docs_all.filter(batch_pred).observe(
+            n_batch_obs, F.count(F.lit(1)).alias("n")
+        ).write.mode("overwrite").parquet(ids_dir)
+        write_run(staged.select("blk", "doc_id"), f"{root}/{run}", _CC)
+        write_payload(staged.select("doc_id", "sgs"), f"{root}/{sh}")
+        n_batch = int(n_batch_obs.get["n"] or 0)
         # heartbeat at the phase boundary (ingest jobs done, merge
         # jobs ahead) — the renewal is a conditional swap, so a
         # taken-over writer fences HERE instead of merging for nothing
         lease.renew()
-        _merge_generation(spark, t_blocks, paths, gens_done, gen)
+        pending = {
+            **snap,
+            "runs": [*snap["runs"], run],
+            "payload": [*snap["payload"], sh],
+            "staging": [stage],
+        }
+        _merge_generation(spark, root, pending, ids_dir, gen)
         commit_snapshot(
             root,
             {
-                "blocks": _block_runs(t_blocks, [*gens_done, gen]),
-                "gens": [*gens_done, gen],
+                **pending,
+                "labels": [*snap["labels"], f"labels/gen={gen}"],
+                "remaps": [*snap["remaps"], f"remaps/gen={gen}"],
                 "n_indexed": snap["n_indexed"] + n_batch,
                 "key_stats": {
-                    "blk": read_delta_key_manifest(
-                        f"{paths['stage']}/delta_{gen}", "blk"
+                    _CC.key: read_delta_key_manifest(
+                        f"{root}/{stage}", _CC.key
                     )
                 },
             },
@@ -681,23 +523,15 @@ def _with_accounting(labels: DataFrame, n_indexed: int) -> DataFrame:
     "twin (extension surface).",
 )
 def dedup_cluster_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t_blocks, paths, docs_all, pay, _ = _build_base(
-        spark, sf_dir, "cc_index"
-    )
+    root, docs_all, pay, _ = _build_base(spark, sf_dir, "cc_index")
     _ingest_and_merge_generation(
-        spark,
-        t_blocks,
-        paths,
-        docs_all,
-        pay,
-        F.col("doc_id") % CC_DELTA_MOD == 0,
-        gen=1,
+        spark, root, docs_all, pay, F.col("doc_id") % CC_DELTA_MOD == 0, gen=1
     )
     # read back from the COMMITTED snapshot: the returned labels and
     # accounting provably consume only published state
-    snap = current_snapshot(paths["root"])
+    snap = current_snapshot(root)
     return _with_accounting(
-        _resolve_labels(spark, paths, snap["gens"]), snap["n_indexed"]
+        _snapshot_labels(spark, root, snap), snap["n_indexed"]
     )
 
 
@@ -726,50 +560,41 @@ def dedup_cluster_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fold changed nothing. No reference twin (extension surface).",
 )
 def dedup_cluster_label_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t_blocks, paths, docs_all, pay, _ = _build_base(
-        spark, sf_dir, "cc_compact"
-    )
+    root, docs_all, pay, _ = _build_base(spark, sf_dir, "cc_compact")
     for gen, batch_pred in (
         (1, F.col("doc_id") % CC_BATCH_MOD == CC_DELTA_MOD),
         (2, F.col("doc_id") % CC_BATCH_MOD == 0),
     ):
         _ingest_and_merge_generation(
-            spark, t_blocks, paths, docs_all, pay, batch_pred, gen
+            spark, root, docs_all, pay, batch_pred, gen
         )
-    snap = current_snapshot(paths["root"])
-    gens, n_total = snap["gens"], snap["n_indexed"]
 
-    # ── COMPACT: fold the remap chain into a flat label store ────────
-    # write-then-publish with a UNIQUE generation-suffixed target (r12
-    # ADVICE): a fixed target name would be rmtree'd while a persisted
-    # _CURRENT pointer from a prior run could still reference it —
-    # between the rmtree and the re-publish a concurrent reader would
-    # resolve a deleted/half-written store, and the invariant would
-    # hold only because index_root(fresh=True) wipes the root each
-    # run. Writing every compaction to a fresh `_compacted_g{gen}`
-    # path means no store a pointer can name is ever deleted before
-    # the pointer moves off it. The flat store is fully written BEFORE
-    # the atomic pointer flip, so a reader concurrent with this
-    # compaction resolves either the journal-chain view or a complete
-    # flat store — never a partial one (r11 verdict item 3; race proof
-    # in tests/test_lifecycle_swap.py). The SUPERSEDED store is NOT
-    # deleted inline (r13 ADVICE: a reader that resolved the old
-    # pointer just before the flip can still be mid-scan of it) — it
-    # stays on disk until scheduled GC past a grace period
-    # (plans/lifecycle.py vacuum_unreferenced, which this root gets
-    # via the fresh-root wipe each registered run). The compactor runs
-    # under the tier's lease like every other committed-state writer,
-    # with the fencing check immediately before the publish.
-    compacted = f"{paths['labels']}_compacted_g{gens[-1]}"
-    with exclusive_append(paths["root"], owner="cc_label_compact") as lease:
-        get_store_io().delete_prefix(compacted)
-        _resolve_labels(spark, paths, gens).write.parquet(compacted)
-        lease.assert_held("label-store publish")
-        publish_store(paths["labels"], compacted)
-    flat = spark.read.schema("doc_id bigint, cluster_id bigint").parquet(
-        current_store(paths["labels"], compacted)
+    # ── COMPACT: fold the remap chain into one flat label store ──────
+    # The shared compact-then-commit step (plans/lifecycle.py
+    # compact_snapshot): under the tier lease, the committed labels
+    # resolved through the committed journal are written to a fresh
+    # generation-suffixed dir, and ONE snapshot commit names it as the
+    # only label store with an empty journal. A reader concurrent with
+    # the fold resolves either the journal-chain snapshot or the flat
+    # one — both complete, both the same labels (race proof in
+    # tests/test_lifecycle_swap.py) — and a later generation merges
+    # through the folded store like any other snapshot. The superseded
+    # label chain stays on disk until vacuum_unreferenced drops it out
+    # of the retention window.
+    compact_snapshot(
+        root,
+        "labels",
+        f"labels/compacted_g{gen}",
+        lambda snap, dst: _snapshot_labels(spark, root, snap)
+        .write.mode("overwrite")
+        .parquet(dst),
+        owner="cc_label_compact",
+        remaps=[],
     )
-    return _with_accounting(flat, n_total)
+    snap = current_snapshot(root)
+    return _with_accounting(
+        _snapshot_labels(spark, root, snap), snap["n_indexed"]
+    )
 
 
 @register(
@@ -819,51 +644,21 @@ def streaming_cluster_ingest_restart(
         ingest_with_injected_restart,
     )
 
-    root = index_root(sf_dir, "cc_stream")
-    docs_all = t(spark, sf_dir, "documents").select("doc_id")
-    # Payload computed ONCE (sized checkpoint) — same rationale as
-    # _build_base: every micro-batch action re-ran the tokenize+
-    # shingle subtree single-task without it.
-    docs = (
-        t(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .select("doc_id", words_col().alias("ws"))
-    )
-    pay, pay_m = checkpointed_payload(
-        _payload(docs),
-        [
-            F.sum(
-                (F.col("doc_id") % CC_DELTA_MOD != 0).cast("long")
-            ).alias("n_base_pay")
-        ],
-    )
-
     # -- base build, under the same ingest_batch=<id> subtree layout
     # as the streamed batches (one consistent partition scheme; the
     # streaming variant trades the batch operator's bucketed blocks
     # for per-batch subtrees because idempotent replay needs a
     # deterministic OVERWRITE unit, which a bucketed append is not).
-    base_pay = pay.filter(F.col("doc_id") % CC_DELTA_MOD != 0)
-    base_labels, _ = connected_components(
-        _pairs_of(base_pay, est_bytes=_subset_bytes(pay_m, "n_base_pay"))
-        .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+    root = index_root(sf_dir, "cc_stream")
+    docs_all, pay, base_pay, n_base = _cluster_base(
+        spark, sf_dir, f"{root}/labels/ingest_batch=base"
     )
-    base_ids = docs_all.filter(F.col("doc_id") % CC_DELTA_MOD != 0)
-    n_base_obs = Observation()
-    base_ids.join(
-        base_labels, base_ids.doc_id == base_labels.id, "left"
-    ).select(
-        "doc_id", F.coalesce("label", "doc_id").alias("cluster_id")
-    ).observe(
-        n_base_obs, F.count(F.lit(1)).alias("n")
-    ).write.parquet(f"{root}/labels/ingest_batch=base")
     base_pay.select("blk", "doc_id").write.parquet(
         f"{root}/blocks/ingest_batch=base"
     )
     base_pay.select("doc_id", "sgs").write.parquet(
         f"{root}/shingles/ingest_batch=base"
     )
-    n_base = int(n_base_obs.get["n"] or 0)
 
     # -- stage the arrivals as 3 files -> 3 micro-batches. The staged
     # rows are the SIGNED payload (blk + shingles computed once here);
@@ -904,24 +699,13 @@ def streaming_cluster_ingest_restart(
             "this module handle tiny corpora)"
         )
 
-    def _labels_through(gens: list[int]) -> DataFrame:
-        allowed = ["base"] + [f"b{g}" for g in gens]
-        cur = (
-            spark.read.parquet(f"{root}/labels")
-            .filter(F.col("ingest_batch").isin(allowed))
-            .select("doc_id", "cluster_id")
+    def labels_through(gens) -> DataFrame:
+        return _resolve_labels(
+            spark,
+            [f"{root}/labels/ingest_batch={sub}"
+             for sub in ("base", *(f"b{g}" for g in gens))],
+            [f"{root}/remaps/gen={g}" for g in gens],
         )
-        for g in gens:
-            rm = spark.read.schema(
-                "old_label bigint, new_label bigint"
-            ).parquet(f"{root}/remaps/gen={g}")
-            cur = cur.join(
-                F.broadcast(rm), cur.cluster_id == rm.old_label, "left"
-            ).select(
-                "doc_id",
-                F.coalesce("new_label", "cluster_id").alias("cluster_id"),
-            )
-        return cur
 
     def ingest(b: DataFrame, bid: int) -> None:
         # Idempotent generation merge: every write overwrites this
@@ -939,16 +723,15 @@ def streaming_cluster_ingest_restart(
             # Same merge semantics as the batch path — shared helpers,
             # only the store IO differs (subtree reads vs bucketed
             # table; subtree overwrite vs append).
-            new_pairs = _verified_pairs(
+            new_pairs = verified_pairs(
                 signed.select(F.col("doc_id").alias("probe_id"), "blk"),
-                spark.read.parquet(f"{root}/blocks").select("blk", "doc_id"),
+                [spark.read.parquet(f"{root}/blocks").select("blk", "doc_id")],
                 spark.read.parquet(f"{root}/shingles").select(
                     "doc_id", "sgs"
                 ),
-            )
-            merged = _contract_and_merge(
-                new_pairs, _labels_through(list(range(bid)))
-            )
+                _CC,
+            ).select("doc_a", "doc_b")
+            merged = _contract_and_merge(new_pairs, labels_through(range(bid)))
             batch_ids = b.select("doc_id")
             batch_ids.join(
                 merged, batch_ids.doc_id == merged.id, "left"
@@ -975,4 +758,4 @@ def streaming_cluster_ingest_restart(
         for d in get_store_io().list_names(f"{root}/remaps")
         if d.startswith("gen=")
     )
-    return _with_accounting(_labels_through(gens), n_base + n_delta)
+    return _with_accounting(labels_through(gens), n_base + n_delta)

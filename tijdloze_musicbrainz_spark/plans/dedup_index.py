@@ -30,25 +30,32 @@ dying mid-transaction leaves readers on the old complete snapshot
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.bucketing import exclusive_append, write_bucketed
+from ..sources.bucketing import exclusive_append
 from .lifecycle import (
-    compact_bucketed,
+    BucketedTier,
     commit_snapshot,
+    compact_bucketed,
+    compact_snapshot,
     current_snapshot,
     index_root,
-    pushdown_keys,
+    manifest,
+    probe_pairs,
     read_delta_key_manifest,
-    sf_tag,
-    write_delta_key_manifest,
+    role_dirs,
+    stage_delta,
+    vacuum_unreferenced,
+    write_payload,
+    write_run,
 )
 from .dedup import (
     JACCARD_PREFIX_CTES,
     JACCARD_VERIFY_SQL,
     band_key_cols,
-    jaccard,
     minhash_agg_exprs,
     shingles_col,
     words_col,
@@ -69,6 +76,9 @@ DEDUP_DELTA_MOD = 10
 # Toy-scale bucket count; at 100 TB size buckets to ~128-256 MB of
 # index each (e.g. ~4096 buckets for a 600 GB band table).
 DEDUP_INDEX_BUCKETS = 16
+# the band tier's run spec: bucketed on band_key, verified at
+# Jaccard >= 0.8 (the dedup_minhash_lsh threshold)
+_MH = BucketedTier("bands", "band_key", "bigint", DEDUP_INDEX_BUCKETS, 0.8)
 
 # The arriving-endpoint-restricted exact pair oracle, stated with the
 # shared prefix-filter CTEs (plans/dedup.py) instead of the exhaustive
@@ -112,98 +122,61 @@ def _shingle_sets(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", shingles_col(F.col("ws")).alias("sgs"))
 
 
-def _write_gen_bands(staged: DataFrame, table: str, location: str) -> None:
-    """One generation's band run: an immutable bucketed table with the
-    SAME bucket spec as every other run (an LSM-style level — probes
-    read each run bucket-aligned; compaction folds runs back to one).
-    Deterministic path + drop-then-write = idempotent on recovery
-    replay. Module-level so the crash test can fail the transaction
-    between store writes."""
-    write_bucketed(
-        staged,
-        table,
-        bucket_cols=["band_key"],
-        num_buckets=DEDUP_INDEX_BUCKETS,
-        sort_cols=["band_key"],
-        location=location,
-    )
-
-
-def _write_gen_shingles(sh: DataFrame, path: str) -> None:
-    """One generation's verify payload at its gen-unique dir —
-    overwrite mode so a recovery replay converges. Module-level for
-    the same crash-injection reason as _write_gen_bands."""
-    sh.write.mode("overwrite").parquet(path)
-
-
 def _ingest_generation(
-    spark: SparkSession,
-    root: str,
-    name: str,
-    tag: str,
-    delta: DataFrame,
-    gen: int = 1,
+    spark: SparkSession, root: str, delta: DataFrame, gen: int = 1
 ) -> None:
-    """The CRASH-ATOMIC ingest transaction (r12 verdict item 1): sign
-    the arriving batch once into the staged probe files, land the
-    generation's band run + shingle payload at gen-unique paths no
-    reader resolves yet, then make everything visible — bands, payload,
-    accounting count, key stats — in ONE snapshot commit
-    (plans/lifecycle.py commit_snapshot: conditional-put manifest +
-    atomic pointer flip, the batch twin of the streaming maintainers'
-    idempotent-subtree replay). A writer dying between ANY two steps
-    leaves the previous snapshot fully intact; recovery re-runs this
-    function — every write is a deterministic-path overwrite — and the
-    commit reclaims its predecessor's orphan manifest. Runs under the
-    index's single-writer lock: a LIVE concurrent ingest gets an
-    explicit ConcurrentAppendError, a DEAD holder's lock is taken over
+    """The CRASH-ATOMIC ingest transaction (r12 verdict item 1): under
+    the index's single-writer lease, sign the arriving batch once into
+    the staged probe files, land the generation's band run + shingle
+    payload at gen-unique paths no reader resolves yet, then make
+    everything visible — run, payload, staging, accounting count, key
+    stats — in ONE snapshot commit (plans/lifecycle.py commit_snapshot:
+    conditional-put manifest + atomic pointer flip). A writer dying
+    between ANY two steps leaves the previous snapshot fully intact;
+    recovery re-runs this function — every write is a deterministic-
+    path overwrite — and the commit reclaims its predecessor's orphan
+    manifest. A LIVE concurrent ingest gets an explicit
+    ConcurrentAppendError, a DEAD holder's lock is taken over
     (sources/bucketing.py stale-lock policy)."""
-    stage = f"{root}/stage/delta_bands" if gen == 1 else (
-        f"{root}/stage/delta_bands_g{gen}"
-    )
-    _bands_of(delta).write.mode("overwrite").parquet(stage)
-    # record the delta's distinct band keys (capped) as the probe's
-    # pushdown sidecar — one bounded job here at ingest so the probe
-    # itself can push an In(band_key, ...) filter into the stored scan
-    # without launching any job (plans/lifecycle.py design note)
-    staged = spark.read.schema("doc_id bigint, band_key bigint").parquet(
-        stage
-    )
-    write_delta_key_manifest(staged, "band_key", stage)
-    with exclusive_append(root, owner=name) as lease:
+    stage, run = f"stage/delta_{gen}", f"bands_g{gen}"
+    pay = f"shingles/gen={gen}"
+    with exclusive_append(root, owner=os.path.basename(root)) as lease:
         snap = current_snapshot(root)
-        t_gen = f"{name}_bands_{tag}_g{gen}"
-        _write_gen_bands(staged, t_gen, f"{root}/bands_g{gen}")
+        # the staged signature + its key sidecar (one bounded job here
+        # at ingest, so the probe can push In(band_key, ...) into the
+        # stored scan without launching any) are written under the
+        # lease like every other store: vacuum keeps only what a
+        # manifest names, so nothing lands in the root outside it
+        staged = stage_delta(
+            spark, _bands_of(delta), f"{root}/{stage}", _MH.key
+        )
+        write_run(staged, f"{root}/{run}", _MH)
         # heartbeat between store writes: each phase runs Spark jobs
         # of data-dependent length, so the lease is renewed at phase
-        # boundaries — margin stays >= lease_s however long the
-        # previous write took (a failed renewal IS the fence firing
-        # early, before any further work)
+        # boundaries (a failed renewal IS the fence firing early)
         lease.renew()
         # one shingle row per delta doc, so the accounting count rides
         # the shingle write as an observation (r15 verdict item 3)
         n_delta_obs = Observation()
-        _write_gen_shingles(
+        write_payload(
             _shingle_sets(delta).observe(
                 n_delta_obs, F.count(F.lit(1)).alias("n")
             ),
-            f"{root}/shingles/gen={gen}",
+            f"{root}/{pay}",
         )
-        n_delta = int(n_delta_obs.get["n"] or 0)
         commit_snapshot(
             root,
-            snap={
-                "bands": [*snap["bands"], t_gen],
-                "shingle_dirs": [
-                    *snap["shingle_dirs"],
-                    f"{root}/shingles/gen={gen}",
-                ],
-                "n_indexed": snap["n_indexed"] + n_delta,
-                # the manifest's key-stats entry — what the probe
-                # pushdown reads at production scale; the staged-dir
-                # sidecar is its colocated twin for raw-path probes
+            {
+                **snap,
+                "runs": [*snap["runs"], run],
+                "payload": [*snap["payload"], pay],
+                "staging": [stage],
+                "n_indexed": snap["n_indexed"]
+                + int(n_delta_obs.get["n"] or 0),
                 "key_stats": {
-                    "band_key": read_delta_key_manifest(stage, "band_key")
+                    _MH.key: read_delta_key_manifest(
+                        f"{root}/{stage}", _MH.key
+                    )
                 },
             },
             lease=lease,
@@ -212,55 +185,38 @@ def _ingest_generation(
 
 def _build_and_ingest(
     spark: SparkSession, sf_dir: str, name: str
-) -> tuple[list[str], list[str], str, int]:
-    """Build the base index (bucketed bands + shingle payload) and
-    commit it as snapshot v0, then run the crash-atomic ingest
-    transaction for the arriving batch (snapshot v1). Returns the
-    probe arguments READ BACK FROM THE COMMITTED SNAPSHOT —
-    (band_tables, shingle_dirs, delta_bands_path, n_indexed) — so
-    every downstream probe provably consumes only published state.
-    Shared by the probe and compaction queries so a fix lands once
-    (the pq_lifecycle convention).
+) -> tuple[str, dict]:
+    """Build the base index and commit it as snapshot v0, then run the
+    crash-atomic ingest transaction for the arriving batch (snapshot
+    v1). Returns ``(root, snapshot)`` READ BACK FROM THE COMMITTED
+    POINTER, so every downstream probe provably consumes only
+    published state. Shared by the probe, compaction and vacuum
+    queries so a fix lands once.
 
-    The delta is MinHash-signed exactly ONCE: the signature lands as a
+    The delta is MinHash-signed exactly ONCE: the signature lands as
     staged parquet and both the generation's band run and the probe
     read those materialized files (r10 ADVICE). ``n_indexed`` is
     maintained incrementally — base count at build + delta count at
-    ingest, both O(source-partition counts) at the moment that data is
-    in hand — never by re-scanning the stored index (r10 verdict item
-    1); since r13 the counter literally lives in the snapshot manifest
-    (the "manifest commit stats" the accounting rule always named)."""
-    root, tag, _base, delta = _build_base_index(spark, sf_dir, name)
-
-    # -- ingest: one crash-atomic snapshot transaction
-    _ingest_generation(spark, root, name, tag, delta)
-
-    snap = current_snapshot(root)
-    return (
-        snap["bands"],
-        snap["shingle_dirs"],
-        f"{root}/stage/delta_bands",
-        snap["n_indexed"],
-    )
+    ingest, both taken from data in hand — never by re-scanning the
+    stored index (r10 verdict item 1)."""
+    root, delta = _build_base_index(spark, sf_dir, name)
+    _ingest_generation(spark, root, delta)
+    return root, current_snapshot(root)
 
 
 def _build_base_index(
     spark: SparkSession, sf_dir: str, name: str
-) -> tuple[str, str, DataFrame, DataFrame]:
+) -> tuple[str, DataFrame]:
     """The base build: the ONE corpus-linear pass over the non-
     arriving 90%, committed as the index's first snapshot. Returns
-    (root, tag, base_docs, delta_docs)."""
-    # fan_out: the minhash sign aggregate is the build's CPU-heavy
-    # stage and the single-file scan would run it as one task
-    # (plans/util.fan_out — no-op at production partition counts).
+    (root, delta_docs)."""
     # checkpointed_payload (r15/r16): the build+ingest transaction
     # issues ~6 actions over base/delta (bands write, shingles write,
-    # count, staged-delta write, ...), each re-running the tokenize+
-    # fan-out subtree without the checkpoint; the checkpoint pays
-    # tokenize+exchange once, is coalesced to its measured data size
-    # (a few MB no longer ride 32 partitions into every downstream
-    # job), and the base/delta accounting counts ride the checkpoint
-    # job as observations instead of costing separate count actions.
+    # staged-delta write, ...), each re-running the tokenize+fan-out
+    # subtree without the checkpoint; the checkpoint pays
+    # tokenize+exchange once, is coalesced to its measured data size,
+    # and the base accounting count rides the checkpoint job as an
+    # observation instead of costing a separate count action.
     docs, docs_m = checkpointed_payload(
         t(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
@@ -280,117 +236,47 @@ def _build_base_index(
     base = docs.filter(F.col("doc_id") % DEDUP_DELTA_MOD != 0)
     delta = docs.filter(F.col("doc_id") % DEDUP_DELTA_MOD == 0)
 
-    tag = sf_tag(sf_dir)
     root = index_root(sf_dir, name)
-    t_bands = f"{name}_bands_{tag}"
-    _write_gen_bands(_bands_of(base), t_bands, f"{root}/bands_g0")
-    _write_gen_shingles(_shingle_sets(base), f"{root}/shingles/gen=0")
+    write_run(_bands_of(base), f"{root}/bands_g0", _MH)
+    write_payload(_shingle_sets(base), f"{root}/shingles/gen=0")
     commit_snapshot(
         root,
-        {
-            "bands": [t_bands],
-            "shingle_dirs": [f"{root}/shingles/gen=0"],
-            "n_indexed": int(docs_m["n_base"] or 0),
-            "key_stats": None,
-        },
+        manifest(
+            runs=["bands_g0"],
+            payload=["shingles/gen=0"],
+            n_indexed=int(docs_m["n_base"] or 0),
+        ),
     )
-    return root, tag, base, delta
+    return root, delta
 
 
-def _probe_index(
-    spark: SparkSession,
-    t_bands: str | list[str],
-    shingle_path: str | list[str],
-    delta_bands_path: str,
-    n_indexed: int,
-) -> DataFrame:
-    """Pure-lazy probe: builds the candidate/verify DataFrame without
-    launching a single Spark job (pinned by
-    tests/test_dedup_index.py::test_probe_is_lazy_and_scans_index_once)
-    and with exactly ONE scan of EACH stored band run in the plan.
-
-    ``t_bands`` is the snapshot's band-run list (an LSM-style level
-    set: the base table plus one immutable bucketed table per ingested
-    generation, folded back to one by compaction) — a probe joins each
-    run bucket-aligned and unions the CANDIDATES, which is exactly the
-    candidate set a single merged table would produce (band-key
-    equality distributes over the union of runs). A plain str is the
-    single-run case."""
-    # -- probe: arrivals vs the stored index ----------------------------
-    # Each stored run is bucketed on band_key, so these equi-joins read
-    # the index in place; only the O(delta) probe side (the staged
-    # signature files, signed once at ingest) moves. least/greatest
-    # orientation + distinct collapses multi-band collisions and the
-    # (delta x delta) pair seen from both sides; the snapshot INCLUDES
-    # the ingested generation's run, so delta-vs-delta pairs in the
-    # output prove the ingest landed in the snapshot being queried.
-    band_runs = [t_bands] if isinstance(t_bands, str) else list(t_bands)
-    # small-delta row-group skipping: the ingest-time key sidecar
-    # (read here with stdlib json — still zero Spark jobs) becomes a
-    # literal In(band_key, ...) predicate pushed into every stored
-    # run's scan. Rows whose band_key is not in the delta's key set
-    # cannot join, so results are identical; what changes is IO —
-    # parquet skips row groups whose stats/dictionary miss every delta
-    # key and Spark prunes non-matching bucket files
-    # (SelectedBucketsCount), instead of reading all
-    # DEDUP_INDEX_BUCKETS buckets end-to-end
-    # (tests/test_dedup_index.py::test_small_delta_probe_skips_row_groups).
-    # COST-BOUNDED (r14): pushed only below the measured break-even
-    # key count — near-cap In lists cost more in optimizer + per-row-
-    # group evaluation than they prune (plans/lifecycle.py
-    # PROBE_PUSHDOWN_MAX_IN; the diagnosed r13 label-compact spike)
-    delta_keys = pushdown_keys(delta_bands_path, "band_key")
-    # explicit schemas: a schema-inference footer read is a (small)
-    # Spark job, and the probe path is pinned to launch NONE
-    probes = (
-        spark.read.schema("doc_id bigint, band_key bigint")
-        .parquet(delta_bands_path)
-        .select(F.col("doc_id").alias("probe_id"), "band_key")
+def _probe_index(spark: SparkSession, root: str, snap: dict) -> DataFrame:
+    """The arrivals' near-dup pairs against the snapshot's band runs
+    (plans/lifecycle.py probe_pairs): pure-lazy — no Spark job (pinned
+    by tests/test_dedup_index.py::test_probe_is_lazy_and_scans_index_once)
+    — with exactly ONE scan of EACH stored band run. The snapshot
+    INCLUDES the ingested generation's run, so delta-vs-delta pairs in
+    the output prove the ingest landed in the snapshot being queried.
+    ``n_indexed`` is the manifest's incrementally-maintained doc count
+    — NOT a scan of the index."""
+    return probe_pairs(spark, root, snap, _MH).withColumn(
+        "n_indexed", F.lit(snap["n_indexed"]).cast("long")
     )
 
-    def _cand_of(run: str) -> DataFrame:
-        stored = spark.table(run)
-        if delta_keys:
-            stored = stored.filter(F.col("band_key").isin(delta_keys))
-        return probes.join(stored.hint("merge"), "band_key").select(
-            "probe_id", "doc_id"
-        )
 
-    all_runs = _cand_of(band_runs[0])
-    for run in band_runs[1:]:
-        all_runs = all_runs.unionByName(_cand_of(run))
-    cand = (
-        all_runs.filter(F.col("probe_id") != F.col("doc_id"))
-        .select(
-            F.least("probe_id", "doc_id").alias("doc_a"),
-            F.greatest("probe_id", "doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
-
-    # -- verify: exact Jaccard over shingle sets fetched by id ---------
-    sh_dirs = (
-        [shingle_path] if isinstance(shingle_path, str) else list(shingle_path)
-    )
-    stored_sh = spark.read.schema("doc_id bigint, sgs array<string>").parquet(
-        *sh_dirs
-    )
-    sh_a = stored_sh.select(
-        F.col("doc_id").alias("doc_a"), F.col("sgs").alias("sgs_a")
-    )
-    sh_b = stored_sh.select(
-        F.col("doc_id").alias("doc_b"), F.col("sgs").alias("sgs_b")
-    )
-    verified = cand.join(sh_a, "doc_a").join(sh_b, "doc_b")
-    jac = jaccard(F.col("sgs_a"), F.col("sgs_b"))
-
-    # bounded accounting: the incrementally-maintained doc count
-    # (build + append, see _build_and_ingest) — NOT a scan of the index
-    return verified.filter(jac >= 0.8).select(
-        "doc_a",
-        "doc_b",
-        F.round(jac, 4).alias("jaccard"),
-        F.lit(n_indexed).cast("long").alias("n_indexed"),
+def _compact_bands(spark: SparkSession, root: str, lease=None) -> None:
+    """Fold the committed band runs into ONE run with one file per
+    bucket (``bands_c``) and commit it as a new snapshot — the shared
+    compact-then-commit step (plans/lifecycle.py compact_snapshot)."""
+    compact_snapshot(
+        root,
+        "runs",
+        "bands_c",
+        lambda snap, dst: compact_bucketed(
+            spark, role_dirs(root, snap, "runs"), dst, _MH
+        ),
+        owner="mh_compact",
+        lease=lease,
     )
 
 
@@ -435,10 +321,7 @@ def _probe_index(
     "mirrors similarity/pq_lifecycle.py.",
 )
 def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t_bands, shingle_path, delta_path, n_indexed = _build_and_ingest(
-        spark, sf_dir, "mh_index"
-    )
-    return _probe_index(spark, t_bands, shingle_path, delta_path, n_indexed)
+    return _probe_index(spark, *_build_and_ingest(spark, sf_dir, "mh_index"))
 
 
 @register(
@@ -464,64 +347,13 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     "key per row) that restores one-file-per-bucket probe reads.",
 )
 def dedup_minhash_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    name = "mh_compact"
-    band_runs, shingle_dirs, delta_path, n_indexed = _build_and_ingest(
-        spark, sf_dir, name
-    )
-    root = index_root(sf_dir, name, fresh=False)
-    compacted = f"{name}_bands_{sf_tag(sf_dir)}_c"
-    # the compactor is a WRITER mutating committed state, so it runs
-    # under the same lease as the ingests (r13 ADVICE: compaction
-    # paths used to call commit_snapshot lockless, so nothing guarded
-    # the reclaim branch against a live concurrent committer)
-    with exclusive_append(root, owner=name) as lease:
-        compact_bucketed(
-            spark,
-            band_runs,
-            compacted,
-            bucket_col="band_key",
-            num_buckets=DEDUP_INDEX_BUCKETS,
-            location=f"{root}/bands_c",
-        )
-        # write-then-publish: the compacted run is fully written, then
-        # ONE snapshot commit (conditional-put manifest + atomic
-        # pointer flip) replaces the whole run set — a probe concurrent
-        # with this compaction resolves either the multi-run or the
-        # compacted COMPLETE snapshot, never a half-written one (r11
-        # verdict item 3; race proof in tests/test_lifecycle_swap.py)
-        prev = current_snapshot(root)
-        commit_snapshot(root, {**prev, "bands": [compacted]}, lease=lease)
-    snap = current_snapshot(root)
-    return _probe_index(
-        spark,
-        snap["bands"],
-        snap["shingle_dirs"],
-        delta_path,
-        snap["n_indexed"],
-    )
-
-
-def _mh_live_children(root: str, name: str, tag: str):
-    """The MinHash tier's manifest → root-child mapping for the
-    snapshot vacuum: band-run TABLE names map to their gen-unique dirs
-    (``{name}_bands_{tag}`` → ``bands_g0``, ``…_g{N}`` → ``bands_g{N}``,
-    ``…_c`` → ``bands_c``), shingle dirs are recorded as paths and
-    rel-pathed under the root. Per-tier because each tier owns its
-    store-name convention (plans/lifecycle.py vacuum_unreferenced)."""
-    import os  # noqa: PLC0415
-
-    base_t = f"{name}_bands_{tag}"
-
-    def children(snap: dict) -> set[str]:
-        live: set[str] = set()
-        for run in snap["bands"]:
-            suffix = run[len(base_t):]
-            live.add("bands_g0" if suffix == "" else f"bands{suffix}")
-        for d in snap["shingle_dirs"]:
-            live.add(os.path.relpath(d, root))
-        return live
-
-    return children
+    root, _ = _build_and_ingest(spark, sf_dir, "mh_compact")
+    # write-then-publish under the tier lease: a probe concurrent with
+    # this compaction resolves either the multi-run or the compacted
+    # COMPLETE snapshot, never a half-written one (race proof in
+    # tests/test_lifecycle_swap.py)
+    _compact_bands(spark, root)
+    return _probe_index(spark, root, current_snapshot(root))
 
 
 @register(
@@ -557,34 +389,17 @@ def _mh_live_children(root: str, name: str, tag: str):
 )
 def dedup_minhash_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json  # noqa: PLC0415
-    import os  # noqa: PLC0415
     import subprocess  # noqa: PLC0415
 
     from ..sources.bucketing import lock_payload  # noqa: PLC0415
     from ..sources.store_io import get_store_io  # noqa: PLC0415
-    from .lifecycle import vacuum_unreferenced  # noqa: PLC0415
 
     name = "mh_vacuum"
-    tag = sf_tag(sf_dir)
-    band_runs, _shingle_dirs, delta_path, _n = _build_and_ingest(
-        spark, sf_dir, name
-    )
-    root = index_root(sf_dir, name, fresh=False)
+    root, _ = _build_and_ingest(spark, sf_dir, name)
     io = get_store_io()
 
     # -- compact (v2): supersedes the v0/v1 generation run dirs
-    compacted = f"{name}_bands_{tag}_c"
-    with exclusive_append(root, owner=name) as lease:
-        compact_bucketed(
-            spark,
-            band_runs,
-            compacted,
-            bucket_col="band_key",
-            num_buckets=DEDUP_INDEX_BUCKETS,
-            location=f"{root}/bands_c",
-        )
-        prev = current_snapshot(root)
-        commit_snapshot(root, {**prev, "bands": [compacted]}, lease=lease)
+    _compact_bands(spark, root)
 
     # -- abandoned-writer debris, never retried: partial run dir,
     # above-pointer manifest, expired dead-pid lease
@@ -602,11 +417,7 @@ def dedup_minhash_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # -- vacuum under the tier lease (takes over the expired debris
     # lease), aggressive retention: only the current snapshot survives
-    report = vacuum_unreferenced(
-        root,
-        _mh_live_children(root, name, tag),
-        keep_snapshots=1,
-    )
+    report = vacuum_unreferenced(root, keep_snapshots=1)
     # deletion-scope checks raise RuntimeError, not assert (r14
     # ADVICE: bare asserts are stripped under python -O, and a
     # mis-scoped vacuum could then pass silently whenever the probe
@@ -615,7 +426,7 @@ def dedup_minhash_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     if report["deleted"] != ["bands_g0", "bands_g1", "bands_g9"]:
         raise RuntimeError(f"vacuum mis-scoped: {report}")
     for kept in ("bands_c", "shingles/gen=0", "shingles/gen=1",
-                 "stage/delta_bands"):
+                 "stage/delta_1"):
         if not os.path.exists(os.path.join(root, kept)):
             raise RuntimeError(f"vacuum deleted a live store: {kept}")
     if os.path.exists(f"{root}/_snapshots/v3.json"):
@@ -623,14 +434,7 @@ def dedup_minhash_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # -- the probe reads the committed snapshot AFTER GC: the driver
     # hash against the incremental oracle proves bit-identical reads
-    snap = current_snapshot(root)
-    return _probe_index(
-        spark,
-        snap["bands"],
-        snap["shingle_dirs"],
-        delta_path,
-        snap["n_indexed"],
-    )
+    return _probe_index(spark, root, current_snapshot(root))
 
 
 _REFRESH_ORACLE = f"""
@@ -770,29 +574,12 @@ def corpus_incremental_refresh_e2e(spark: SparkSession, sf_dir: str) -> DataFram
     # entry count grows by one band run + one shingle gen per day —
     # the LSM operability tax the nightly job must pay down itself.
     from ..sources.store_io import get_store_io  # noqa: PLC0415
-    from .lifecycle import vacuum_unreferenced  # noqa: PLC0415
 
-    name, tag = "mh_refresh", sf_tag(sf_dir)
-    band_runs, _sh, delta_path, _n = _build_and_ingest(spark, sf_dir, name)
-    root = index_root(sf_dir, name, fresh=False)
-    compacted = f"{name}_bands_{tag}_c"
+    name = "mh_refresh"
+    root, _ = _build_and_ingest(spark, sf_dir, name)
     with exclusive_append(root, owner=name) as lease:
-        compact_bucketed(
-            spark,
-            band_runs,
-            compacted,
-            bucket_col="band_key",
-            num_buckets=DEDUP_INDEX_BUCKETS,
-            location=f"{root}/bands_c",
-        )
-        prev = current_snapshot(root)
-        commit_snapshot(root, {**prev, "bands": [compacted]}, lease=lease)
-        report = vacuum_unreferenced(
-            root,
-            _mh_live_children(root, name, tag),
-            keep_snapshots=1,
-            lease=lease,
-        )
+        _compact_bands(spark, root, lease=lease)
+        report = vacuum_unreferenced(root, keep_snapshots=1, lease=lease)
     # deletion scope + boundedness, loud under python -O: exactly the
     # superseded generation runs go; what remains is the compacted
     # store + the manifest-referenced shingle payload + the stage —
@@ -806,11 +593,9 @@ def corpus_incremental_refresh_e2e(spark: SparkSession, sf_dir: str) -> DataFram
     if entries != ["bands_c", "shingles", "stage"]:
         raise RuntimeError(f"root entry count not bounded: {entries}")
 
-    snap = current_snapshot(root)
-    pairs = _probe_index(
-        spark, snap["bands"], snap["shingle_dirs"], delta_path,
-        snap["n_indexed"],
-    ).select("doc_a", "doc_b")
+    pairs = _probe_index(spark, root, current_snapshot(root)).select(
+        "doc_a", "doc_b"
+    )
     d_a, d_b = (
         F.col("doc_a") % DEDUP_DELTA_MOD == 0,
         F.col("doc_b") % DEDUP_DELTA_MOD == 0,
@@ -875,26 +660,22 @@ def corpus_incremental_refresh_e2e(spark: SparkSession, sf_dir: str) -> DataFram
 )
 def dedup_minhash_ingest_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json  # noqa: PLC0415
-    import os  # noqa: PLC0415
     import subprocess  # noqa: PLC0415
 
+    from ..sources.bucketing import lock_payload  # noqa: PLC0415
     from ..sources.store_io import get_store_io  # noqa: PLC0415
 
     name = "mh_recover"
-    root, tag, _base, delta = _build_base_index(spark, sf_dir, name)
+    root, delta = _build_base_index(spark, sf_dir, name)
     io = get_store_io()
 
     # -- the dead writer's debris, exactly as a mid-transaction kill
     # leaves it: staged files + sidecar + band run, no payload, an
     # orphan manifest one version past the pointer, and a stale lock
-    stage = f"{root}/stage/delta_bands"
-    _bands_of(delta).write.mode("overwrite").parquet(stage)
-    staged = spark.read.schema("doc_id bigint, band_key bigint").parquet(
-        stage
+    staged = stage_delta(
+        spark, _bands_of(delta), f"{root}/stage/delta_1", _MH.key
     )
-    write_delta_key_manifest(staged, "band_key", stage)
-    t_gen = f"{name}_bands_{tag}_g1"
-    _write_gen_bands(staged, t_gen, f"{root}/bands_g1")
+    write_run(staged, f"{root}/bands_g1", _MH)
     io.put_if_absent(
         f"{root}/_snapshots/v1.json",
         json.dumps({"orphan": "written-but-never-published"}),
@@ -903,8 +684,6 @@ def dedup_minhash_ingest_recovery(spark: SparkSession, sf_dir: str) -> DataFrame
     # EXPIRED lease from a pid that no longer exists, so recovery
     # exercises both takeover clauses: expiry for the multi-host case,
     # pid-death as the same-host fast path)
-    from ..sources.bucketing import lock_payload  # noqa: PLC0415
-
     dead = subprocess.Popen(["true"])
     dead.wait()
     io.put_atomic(
@@ -913,13 +692,5 @@ def dedup_minhash_ingest_recovery(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     # -- recovery: take over the lock, replay the generation, commit
-    _ingest_generation(spark, root, name, tag, delta)
-
-    snap = current_snapshot(root)
-    return _probe_index(
-        spark,
-        snap["bands"],
-        snap["shingle_dirs"],
-        stage,
-        snap["n_indexed"],
-    )
+    _ingest_generation(spark, root, delta)
+    return _probe_index(spark, root, current_snapshot(root))

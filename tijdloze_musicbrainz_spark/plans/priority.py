@@ -24,7 +24,7 @@ Ranking rationale (defensive against an even smaller window):
 
 from __future__ import annotations
 
-from .benchmark_real import REAL_CSV_PRESENT
+from .benchmark_real import CSV_GATED, REAL_CSV_PRESENT
 
 DRIVER_WINDOW_SIZE = 50
 
@@ -32,11 +32,9 @@ DRIVER_WINDOW_SIZE = 50
 # DRIVER_WINDOW is filtered on the same predicate so a checkout
 # WITHOUT the reference CSV still passes tests/test_registry_window.py
 # (r7 ADVICE, medium): the window must never name an unregistered query.
-_CONDITIONAL_PRESENT: dict[str, bool] = {
-    "benchmark_golden_real_e2e": REAL_CSV_PRESENT,
-    "benchmark_golden_wrong_rows": REAL_CSV_PRESENT,
-    "benchmark_candidates_debug": REAL_CSV_PRESENT,
-}
+_CONDITIONAL_PRESENT: dict[str, bool] = dict.fromkeys(
+    CSV_GATED, REAL_CSV_PRESENT
+)
 
 _DRIVER_WINDOW_ALL: tuple[str, ...] = (
     # -- tier 1: flagship + composed end-to-end goldens ------------------

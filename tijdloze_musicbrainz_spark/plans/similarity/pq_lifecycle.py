@@ -13,12 +13,16 @@ import pandas as pd  # noqa: F401,TC002  (pandas_udf resolves 'pd.Series' hints 
 from pyspark.sql import Column, DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F
 
+from ...sources.bucketing import exclusive_append
 from ..lifecycle import (
     commit_snapshot,
     compact_partitioned,
+    compact_snapshot,
     current_snapshot,
     index_root,
     list_partition_ids,
+    manifest,
+    role_dirs,
 )
 from ..registry import register
 from ..util import t  # noqa: F401
@@ -577,7 +581,7 @@ FROM topk t CROSS JOIN probed pr CROSS JOIN parts pa
 def sim_ann_ivf_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _pq_vecs(spark, sf_dir)
     subs = _pq_subs(base)
-    root = _pq_index_root(sf_dir, "ivfpq_index")
+    root = index_root(sf_dir, "ivfpq_index")
     _pq_write_index(base, subs, _pq_seed_codebook(base, subs), _ivf_cents(base), root)
     topk, _, _, probed_ids = _pq_query_stored(spark, base, subs, root, base)
     # Accounting from the CATALOG (the hive-style partition listing),
@@ -652,17 +656,11 @@ _PQA_ORACLE = (
 
 
 # ── shared lifecycle helpers (build / ingest / stored-index query) ──
-# One implementation serves all four lifecycle queries (persisted,
-# append, compacted, streaming ingest): a fix like the r9 parts_read
-# correction lands once, not four times. Store-root naming and the
-# compaction driver are shared with the dedup tier's band index
-# (plans/lifecycle.py — r10 verdict item 8); _pq_index_root survives
-# as the ANN-flavored alias.
-
-
-def _pq_index_root(sf_dir: str, name: str) -> str:
-    """Fresh per-(query, sf) directory under the sink root."""
-    return index_root(sf_dir, name, fresh=True)
+# One implementation serves every lifecycle query (persisted, append,
+# compacted, streaming ingest, retrain, restart): a fix like the r9
+# parts_read correction lands once. Store roots, the manifest schema,
+# commits and compaction are shared with the other two index tiers
+# (plans/lifecycle.py).
 
 
 def _pq_write_index(
@@ -671,23 +669,35 @@ def _pq_write_index(
     cb: DataFrame,
     cents: DataFrame,
     root: str,
+    run: str = "lists",
 ) -> None:
     """The ONE corpus-linear build pass: centroid-partitioned code
-    lists (one file per partition via repartition), plus the tiny
-    codebook and centroid tables as their own parquets — committed as
-    the index's first snapshot (r13: the ANN twin of the band/block
-    tiers' crash-atomic layout; readers resolve only committed run
-    dirs, so a writer dying mid-ingest can never expose a
-    half-applied batch)."""
+    lists at ``run`` (one file per partition via repartition), plus
+    the tiny codebook and centroid tables as their own parquets —
+    committed as the index's first snapshot (runs, codebook and
+    centroids roles; readers resolve only committed dirs, so a writer
+    dying mid-ingest can never expose a half-applied batch)."""
     lists = _nearest_cent(base, cents, "vec_id", "v", 1).select(
         F.col("vec_id").alias("match_id"), "cent_id"
     )
     _pq_encode(subs, cb).join(lists, "match_id").repartition(
         "cent_id"
-    ).write.partitionBy("cent_id").parquet(f"{root}/lists")
+    ).write.partitionBy("cent_id").parquet(f"{root}/{run}")
     cb.write.parquet(f"{root}/codebook")
     cents.write.parquet(f"{root}/cents")
-    commit_snapshot(root, {"list_dirs": ["lists"]})
+    commit_snapshot(
+        root, manifest(runs=[run], codebook=["codebook"], centroids=["cents"])
+    )
+
+
+def _pq_model(spark: SparkSession, root: str) -> tuple[DataFrame, DataFrame]:
+    """The committed snapshot's (codebook, centroids) — the frozen
+    model every ingest encodes and assigns against."""
+    snap = current_snapshot(root)
+    return (
+        spark.read.parquet(*role_dirs(root, snap, "codebook")),
+        spark.read.parquet(*role_dirs(root, snap, "centroids")),
+    )
 
 
 def _pq_delta(base: DataFrame) -> DataFrame:
@@ -722,8 +732,6 @@ def _pq_ingest_batch(
     are sequential within one query, each acquiring in turn, and a
     REPLAYED micro-batch rewrites its own dir and re-commits without
     duplicating the snapshot entry."""
-    from ...sources.bucketing import exclusive_append  # noqa: PLC0415
-
     b = batch_df
     if "iv" not in b.columns:
         b = b.withColumn(
@@ -734,16 +742,16 @@ def _pq_ingest_batch(
         F.col("vec_id").alias("match_id"), "cent_id"
     )
     enc = _pq_encode(_pq_subs(b), stored_cb).join(b_lists, "match_id")
-    sub = f"lists_{gen}"
+    run = f"lists_{gen}"
     with exclusive_append(root, owner=f"pq_ingest_{gen}") as lease:
         enc.repartition("cent_id").write.mode("overwrite").partitionBy(
             "cent_id"
-        ).parquet(f"{root}/{sub}")
+        ).parquet(f"{root}/{run}")
         snap = current_snapshot(root)
-        dirs = snap["list_dirs"]
-        if sub not in dirs:  # replay re-commits without duplicating
-            dirs = [*dirs, sub]
-        commit_snapshot(root, {**snap, "list_dirs": dirs}, lease=lease)
+        runs = snap["runs"]
+        if run not in runs:  # replay re-commits without duplicating
+            runs = [*runs, run]
+        commit_snapshot(root, {**snap, "runs": runs}, lease=lease)
 
 
 def _pq_query_stored(
@@ -752,24 +760,20 @@ def _pq_query_stored(
     subs: DataFrame,
     root: str,
     corpus: DataFrame,
-    lists_dir: str = "lists",
 ) -> tuple[DataFrame, DataFrame, DataFrame, list[int]]:
     """Query the STORED index: probes against the stored centroids,
     probed ids (bounded collect, <= MAX_QUERIES * N_PROBE) become the
     partition-pruning IN filter on the code lists, the re-read
     codebook builds the broadcast ADC tables, and exact vectors are
-    fetched from ``corpus`` only for the shortlist re-rank. The code
-    lists are resolved through the index's COMMITTED SNAPSHOT when
-    one exists (the run-dir set the crash-atomic ingest publishes;
-    each run scanned with its own PartitionFilters, candidates
-    unioned) — ``lists_dir`` is the fallback for stores laid out
-    outside the snapshot protocol (the restart proof's two-level
-    tree). Returns (topk, stored, pruned, probed_ids) — accounting
+    fetched from ``corpus`` only for the shortlist re-rank. Every
+    store is resolved through the index's COMMITTED SNAPSHOT (the
+    code-list runs the crash-atomic ingest publishes, each scanned
+    with its own PartitionFilters and unioned, plus the codebook and
+    centroids). Returns (topk, stored, pruned, probed_ids) — accounting
     columns are the caller's (probed_ids so callers can account
     parts_read against the catalog listing without re-scanning
     anything)."""
-    stored_cb = spark.read.parquet(f"{root}/codebook")
-    stored_cents = spark.read.parquet(f"{root}/cents")
+    stored_cb, stored_cents = _pq_model(spark, root)
     probes = _nearest_cent(
         base.filter(_query_filter()).select(
             F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
@@ -782,11 +786,10 @@ def _pq_query_stored(
     probed_ids = sorted(
         {r["cent_id"] for r in probes.select("cent_id").distinct().collect()}
     )
-    snap = current_snapshot(root)
-    dirs = snap["list_dirs"] if snap else [lists_dir]
-    stored = spark.read.parquet(f"{root}/{dirs[0]}")
-    for d in dirs[1:]:
-        stored = stored.unionByName(spark.read.parquet(f"{root}/{d}"))
+    runs = role_dirs(root, current_snapshot(root), "runs")
+    stored = spark.read.parquet(runs[0])
+    for d in runs[1:]:
+        stored = stored.unionByName(spark.read.parquet(d))
     pruned = stored.filter(F.col("cent_id").isin(probed_ids))
     coded_cand = (
         probes.join(pruned, "cent_id")
@@ -857,18 +860,13 @@ def _pq_n_appended_stored(stored: DataFrame) -> int:
 def sim_ann_ivf_pq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _pq_vecs(spark, sf_dir)
     subs = _pq_subs(base)
-    root = _pq_index_root(sf_dir, "ivfpq_append")
+    root = index_root(sf_dir, "ivfpq_append")
     _pq_write_index(
         base, subs, _pq_seed_codebook(base, subs), _ivf_cents(base), root
     )
     delta = _pq_delta(base)
     n_appended = delta.count()
-    _pq_ingest_batch(
-        delta,
-        spark.read.parquet(f"{root}/codebook"),
-        spark.read.parquet(f"{root}/cents"),
-        root,
-    )
+    _pq_ingest_batch(delta, *_pq_model(spark, root), root)
     corpus = base.select("vec_id", "v").unionByName(
         delta.select("vec_id", "v")
     )
@@ -902,39 +900,28 @@ def sim_ann_ivf_pq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_ann_ivf_pq_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _pq_vecs(spark, sf_dir)
     subs = _pq_subs(base)
-    root = _pq_index_root(sf_dir, "ivfpq_compact")
+    root = index_root(sf_dir, "ivfpq_compact")
     _pq_write_index(
         base, subs, _pq_seed_codebook(base, subs), _ivf_cents(base), root
     )
     delta = _pq_delta(base)
     n_appended = delta.count()
-    _pq_ingest_batch(
-        delta,
-        spark.read.parquet(f"{root}/codebook"),
-        spark.read.parquet(f"{root}/cents"),
-        root,
-    )
+    _pq_ingest_batch(delta, *_pq_model(spark, root), root)
 
     # ── COMPACT: fold the snapshot's run set (base + ingested
-    # generation) into one store with one file per centroid partition,
-    # then publish the replacement as a NEW snapshot — write-then-
-    # publish, so a concurrent pruned read resolves the multi-run or
-    # the compacted COMPLETE run set, never a half-written one. Under
-    # the tier's lease like every committed-state writer (r13 ADVICE:
-    # lockless compaction commits left the reclaim branch unguarded).
-    from ...sources.bucketing import exclusive_append  # noqa: PLC0415
-
-    with exclusive_append(root, owner="pq_compact") as lease:
-        snap = current_snapshot(root)
-        compact_partitioned(
-            spark,
-            [f"{root}/{d}" for d in snap["list_dirs"]],
-            f"{root}/lists_compacted",
-            "cent_id",
-        )
-        commit_snapshot(
-            root, {**snap, "list_dirs": ["lists_compacted"]}, lease=lease
-        )
+    # generation) into one store with one file per centroid partition
+    # and commit it as a NEW snapshot — the shared compact-then-commit
+    # step, so a concurrent pruned read resolves the multi-run or the
+    # compacted COMPLETE run set, never a half-written one.
+    compact_snapshot(
+        root,
+        "runs",
+        "lists_compacted",
+        lambda snap, dst: compact_partitioned(
+            spark, role_dirs(root, snap, "runs"), dst, "cent_id"
+        ),
+        owner="pq_compact",
+    )
 
     corpus = base.select("vec_id", "v").unionByName(
         delta.select("vec_id", "v")
@@ -978,7 +965,7 @@ def streaming_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = _pq_vecs(spark, sf_dir)
     subs = _pq_subs(base)
-    root = _pq_index_root(sf_dir, "ivfpq_stream")
+    root = index_root(sf_dir, "ivfpq_stream")
     _pq_write_index(
         base, subs, _pq_seed_codebook(base, subs), _ivf_cents(base), root
     )
@@ -989,8 +976,7 @@ def streaming_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage = f"{root}/arrivals"
     delta.repartition(3).write.parquet(stage)
 
-    stored_cb = spark.read.parquet(f"{root}/codebook")
-    stored_cents = spark.read.parquet(f"{root}/cents")
+    stored_cb, stored_cents = _pq_model(spark, root)
 
     schema = StructType(
         [
@@ -1076,7 +1062,7 @@ def sim_ann_ivf_pq_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # base-derived even when sourced from the union; the refinement
     # then trains over the WHOLE union
     cb1 = _pq_lloyd_refine(usubs, _pq_seed_codebook(union, usubs))
-    root = _pq_index_root(sf_dir, "ivfpq_retrain")
+    root = index_root(sf_dir, "ivfpq_retrain")
     # rewrite: refined codebook + union re-encode, centroids frozen
     _pq_write_index(union, usubs, cb1, _ivf_cents(base), root)
     n_appended = delta.count()
@@ -1124,28 +1110,21 @@ def streaming_ann_ingest_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = _pq_vecs(spark, sf_dir)
     subs = _pq_subs(base)
-    root = _pq_index_root(sf_dir, "ivfpq_restart")
+    root = index_root(sf_dir, "ivfpq_restart")
 
     # Base build, under the SAME two-level layout as the ingested
     # batches (ingest_batch=base/cent_id=N) so the whole lists tree
     # has one consistent partition scheme.
-    cb = _pq_seed_codebook(base, subs)
-    cents = _ivf_cents(base)
-    base_lists = _nearest_cent(base, cents, "vec_id", "v", 1).select(
-        F.col("vec_id").alias("match_id"), "cent_id"
+    _pq_write_index(
+        base, subs, _pq_seed_codebook(base, subs), _ivf_cents(base), root,
+        run="lists/ingest_batch=base",
     )
-    _pq_encode(subs, cb).join(base_lists, "match_id").repartition(
-        "cent_id"
-    ).write.partitionBy("cent_id").parquet(f"{root}/lists/ingest_batch=base")
-    cb.write.parquet(f"{root}/codebook")
-    cents.write.parquet(f"{root}/cents")
 
     delta = _pq_delta(base).select("vec_id", "v")
     stage = f"{root}/arrivals"
     delta.repartition(3).write.parquet(stage)
 
-    stored_cb = spark.read.parquet(f"{root}/codebook")
-    stored_cents = spark.read.parquet(f"{root}/cents")
+    stored_cb, stored_cents = _pq_model(spark, root)
 
     from ...streaming.restart_harness import (  # noqa: PLC0415
         ingest_with_injected_restart,
@@ -1180,6 +1159,13 @@ def streaming_ann_ingest_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest_with_injected_restart(
         spark, schema, stage, f"{root}/ckpt", ingest
     )
+    # the micro-batches overwrite their own subtrees outside the
+    # snapshot protocol (the replayable unit); once the stream has
+    # drained, ONE commit publishes the whole two-level tree
+    with exclusive_append(root, owner="pq_restart") as lease:
+        commit_snapshot(
+            root, {**current_snapshot(root), "runs": ["lists"]}, lease=lease
+        )
 
     corpus = base.select("vec_id", "v").unionByName(delta)
     topk, stored, _, _ = _pq_query_stored(spark, base, subs, root, corpus)

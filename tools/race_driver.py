@@ -15,7 +15,8 @@ Roles:
   root (``SPARK_GRAFT_SINK_DIR`` is shared across both drivers), then
   runs the REAL generation-1 ingest transaction
   (plans/dedup_index._ingest_generation) with one injection: the
-  shingle-payload phase first drops an ``in_critical`` marker and
+  payload phase (the shared ``write_payload``) first drops an
+  ``in_critical`` marker and
   blocks until a ``go`` file appears. The orchestrator SIGSTOPs (the
   GC-paused zombie) or SIGKILLs (the dead writer) this process while
   it holds the lease mid-transaction. A resumed zombie finishes its
@@ -27,9 +28,10 @@ Roles:
   retries the SAME ingest until the takeover succeeds (lease expiry
   for the stopped zombie, dead-pid for the killed writer — both real
   policy paths, no fakes). The base run's catalog entry does not
-  exist in this process, so it ATTACHES the committed store with
-  register_bucketed (catalog-per-session, storage shared — the
-  multi-host contract), probes the committed snapshot, and writes the
+  exist in this process, so it ATTACHES the committed run with
+  register_bucketed under the name the manifest's run dir derives
+  (plans/lifecycle.run_table — catalog-per-session, storage shared:
+  the multi-host contract), probes the committed snapshot, and writes the
   sorted probe rows to ``probe.json`` for the orchestrator's
   sequential-twin comparison.
 
@@ -65,7 +67,7 @@ def main() -> None:
     from tijdloze_musicbrainz_spark.plans.dedup import words_col
     from tijdloze_musicbrainz_spark.plans.lifecycle import (
         current_snapshot,
-        sf_tag,
+        run_table,
     )
     from tijdloze_musicbrainz_spark.plans.util import t
     from tijdloze_musicbrainz_spark.session import get_spark
@@ -87,14 +89,14 @@ def main() -> None:
         di.exclusive_append = functools.partial(
             bk.exclusive_append, lease_s=lease_s
         )
-        root, tag, _base, delta = di._build_base_index(spark, sf_dir, name)
+        root, delta = di._build_base_index(spark, sf_dir, name)
         with open(os.path.join(shared, "base_built"), "w") as f:
             f.write(root)
 
         # inject the stall only AFTER the base build (the build also
         # writes a shingle payload; the race targets the leased gen-1
         # transaction)
-        real_write = di._write_gen_shingles
+        real_write = di.write_payload
 
         def stall_then_write(sh, path):
             with open(os.path.join(shared, "in_critical"), "w") as f:
@@ -102,9 +104,9 @@ def main() -> None:
             _wait_for(os.path.join(shared, "go"))
             real_write(sh, path)
 
-        di._write_gen_shingles = stall_then_write
+        di.write_payload = stall_then_write
         try:
-            di._ingest_generation(spark, root, name, tag, delta)
+            di._ingest_generation(spark, root, delta)
         except bk.FencedOut:
             # the successor's committed state, read through the REAL
             # store, must be intact after our fenced commit attempt
@@ -119,12 +121,11 @@ def main() -> None:
         _wait_for(os.path.join(shared, "in_critical"))
         with open(os.path.join(shared, "base_built")) as f:
             root = f.read().strip()
-        tag = sf_tag(sf_dir)
         # catalog-per-session: attach the committed base run from the
         # shared store before replaying the generation
         bk.register_bucketed(
             spark,
-            f"{name}_bands_{tag}",
+            run_table(f"{root}/bands_g0"),
             "doc_id BIGINT, band_key BIGINT",
             ["band_key"],
             di.DEDUP_INDEX_BUCKETS,
@@ -134,21 +135,14 @@ def main() -> None:
         deadline = time.time() + 120.0
         while True:
             try:
-                di._ingest_generation(spark, root, name, tag, delta)
+                di._ingest_generation(spark, root, delta)
                 break
             except bk.ConcurrentAppendError:
                 if time.time() > deadline:
                     print("TAKEOVER_TIMEOUT", flush=True)
                     sys.exit(5)
                 time.sleep(0.5)
-        snap = current_snapshot(root)
-        rows = di._probe_index(
-            spark,
-            snap["bands"],
-            snap["shingle_dirs"],
-            f"{root}/stage/delta_bands",
-            snap["n_indexed"],
-        ).collect()
+        rows = di._probe_index(spark, root, current_snapshot(root)).collect()
         out = sorted(
             [r["doc_a"], r["doc_b"], round(r["jaccard"], 9), r["n_indexed"]]
             for r in rows
